@@ -71,19 +71,6 @@ object Bench {
     st.sum + med + java.lang.Long.bitCount(ah)
   }
 
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   /** The headline pipeline: synth N images + M polygons → covering-cell
     * broadcast spatial join → pixel-space crop rects → tile assignment
     * → (optionally) per-match payload decode + crop stats → aggregate.
@@ -128,7 +115,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Session.defaultCores
     val benchN = sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "128000000").toLong
     val scaleN = sys.env.getOrElse("SPARK_GRAFT_SCALE_N", "16000000").toLong
 
@@ -137,7 +124,7 @@ object Bench {
       "q_tiles", "q_knn", "q_crop_rects", "q_indices_stats", "q_histogram",
       "q_doc_tokens", "q_minhash_sig", "q_dedup_exact", "q_ann_cosine_topk",
       "q_events_sessions", "q_tpch_pricing", "q_overlay_order")
-    val spark = session(cpus)
+    val spark = Session("graft-bench", cpus)
     // untimed warm-up at sf0.001: the first query through a cold JVM
     // pays JIT + codegen + parquet-reader init, not plan cost (measured
     // 16.2 s cold vs 2.1 s steady-state for the IDENTICAL q_spatial_join

@@ -5068,9 +5068,8 @@ object SparkEntry {
 
     // min-plus scatter flood of the chamfer cost distance: each round
     // re-emits every reached cell with MIN(stay, neighbor + step);
-    // the bound (96) exceeds the measured convergence round count of
-    // the label correction (Terrain.lastCostRounds, spec-pinned) —
-    // extra rounds are no-ops once converged
+    // the bound (96) exceeds the longest optimal path's hop count on
+    // these rasters — extra rounds are no-ops once converged
     "q_cost_distance" ->
       s"""WITH RECURSIVE $I, $SimgCte, $DemCte,
          |cdo(dx, dy, wm) AS (VALUES (0,0,0),(1,0,2),(0,1,2),(-1,0,2),

@@ -391,16 +391,13 @@ object Terrain {
           (col("qx") =!= col("px") || col("qy") =!= col("py")).as("moved"))
         .localCheckpoint()
       changed = next.where(col("moved")).count()
+      gen.commit()
       ptr = next.drop("moved")
     }
     ptr.join(broadcast(meta), Seq("k"))
       .select(col("k"), col("image_id"), col("x"), col("y"),
         col("px"), col("py"))
   }
-
-  /** Instrumentation: label-correction rounds of the last
-    * costDistance call on this JVM (bench evidence; not a result). */
-  @volatile var lastCostRounds: Int = 0
 
   /** Per-image multi-source Dijkstra kernel for [[costDistance]]:
     * decode once, run the binary-heap label-setting pass in task
@@ -474,16 +471,12 @@ object Terrain {
     * Input: dem table (k, image_id, w, h, dem_bytes). Output: one row
     * per REACHED cell (k, image_id, x, y, c, dist); images without a
     * source cell emit nothing. */
-  def costDistance(dem: DataFrame): DataFrame = {
-    // single map pass — no shuffle rounds (instrumentation kept for
-    // the spec's round-bound assertion)
-    lastCostRounds = 1
+  def costDistance(dem: DataFrame): DataFrame =
     dem
       .withColumn("e", explode(costDistUdf(col("dem_bytes"),
         col("w").cast("int"), col("h").cast("int"))))
       .select(col("k"), col("image_id"), col("e._1").as("x"),
         col("e._2").as("y"), col("e._3").as("c"), col("e._4").as("dist"))
-  }
 
   /** CONTOUR crossings (the marching-squares primitive): for each iso
     * level, a grid edge is crossed iff exactly one endpoint sits below

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 import java.nio.file.{Files, Paths}
 
@@ -13,26 +12,17 @@ import java.nio.file.{Files, Paths}
   *
   * Usage: runMain graft.tools.BenchExtra [--plans <tag>/<suffix>] q1 q2 ...
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-  *      SPARK_GRAFT_CPUS (default 32).
+  *      SPARK_GRAFT_CPUS (default: all available processors).
   * NOT part of the driver contract — Bench.scala is the frozen harness.
   */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val (planDest, names) =
       if (args.length >= 2 && args(0) == "--plans")
         (Some(args(1)), args.drop(2).toSeq)
       else (None, args.toSeq)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-extra")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-bench-extra")
     // steady-state warm-up (same rationale as Bench: cold JVM pays
     // JIT/codegen/reader init, not plan cost)
     names.headOption.foreach { w =>

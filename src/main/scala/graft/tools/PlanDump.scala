@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FormattedMode
 import graft.gen.Synth
@@ -32,13 +32,8 @@ object PlanDump {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // fixed at 4, not host-sized, so BENCH/PLANS.md reproduces anywhere
+    val spark = graft.Session("graft-plandump", cores = 4)
     val dir = "/root/testdata/sf0.001"
 
     val im = Synth.imagesRange(spark, 100000, 8)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.Bench
 
 /** One leg of the two-cluster-size scaling protocol: run the headline
@@ -111,24 +110,18 @@ object ScalePhase {
     }
 
     // --- the Spark job itself ---
-    val builder = SparkSession.builder()
-      .master(master)
-      .appName(s"graft-scale-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    if (isCluster) {
-      // real executor JVMs need the graft classes on their classpath
-      builder
-        .config("spark.executor.extraClassPath",
-          new java.io.File("target/scala-2.13/classes").getAbsolutePath)
-        .config("spark.executor.memory", "5g")
+    val clusterConf =
+      if (!isCluster) Map.empty[String, String]
+      else Map(
+        "spark.master" -> master,
+        // real executor JVMs need the graft classes on their classpath
+        "spark.executor.extraClassPath" ->
+          new java.io.File("target/scala-2.13/classes").getAbsolutePath,
+        "spark.executor.memory" -> "5g",
         // G1 hits the microVM madvise pathology documented in build.sbt;
         // executors must pin ParallelGC like every other JVM here
-        .config("spark.executor.extraJavaOptions", "-XX:+UseParallelGC")
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+        "spark.executor.extraJavaOptions" -> "-XX:+UseParallelGC")
+    val spark = graft.Session(s"graft-scale-$cpus", cpus, clusterConf)
     Bench.joinTilePipeline(spark, math.min(n / 8, 1000000L), 1000, cpus * 4,
       decode = true, sizeDiv = 4) // JIT/codegen warm-up
     val secs = (1 to 2).map { _ =>

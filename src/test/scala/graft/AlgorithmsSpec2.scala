@@ -1,24 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.ops.{Algorithms, Tiling}
 import graft.gen.Synth
 
 /** Round-2 operator specs: farthest-point seeding, pixel-spectra
   * k-means determinism, Brovey two-table exactness, tile stitch. */
-class AlgorithmsSpec2 extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-alg2-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class AlgorithmsSpec2 extends SparkSuite {
 
   test("farthestPointSeeds: greedy max-min property (GeoAlgorithms.h:87-117)") {
     // 1-D sample: clusters at 0, 100, 50, 10 — greedy from index 0

@@ -1,26 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.api.GippySpark
 import graft.gen.Synth
 
 /** Typed user-surface smoke: the round-4 API additions (mosaicInto,
   * nearestNeighbors) produce the same results as the operators they
   * wrap — the "a gippy user could switch" contract. */
-class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-api-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ApiSpec extends SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
 

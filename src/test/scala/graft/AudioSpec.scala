@@ -1,25 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.gen.Synth
 import graft.ops.Audio
 
 /** Audio-modality specs: PCM codec round trip, kernel-vs-brute cross
   * checks for every clip op, relational VAD islands vs a sequential
   * scan, and the constructed-twin near-duplicate guarantee. */
-class AudioSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-audio-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class AudioSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
   private val Ks = Seq(1L, 7L, 40L, 123L)

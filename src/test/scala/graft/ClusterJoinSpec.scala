@@ -1,25 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Grid-DBSCAN and edit-distance-join contracts, both checked
   * against in-process brute force on deterministic fixtures: the
   * banded/gridded production paths must return EXACTLY the
   * quadratic reference answer (the prefilters are completeness-
   * preserving, not approximate). */
-class ClusterJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-clusterjoin-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ClusterJoinSpec extends SparkSuite {
 
   private def lcg(seed: Long, n: Int, mod: Int): Array[Long] =
     Iterator.iterate(seed)(s => s * 6364136223846793005L + 1442695040888963407L)

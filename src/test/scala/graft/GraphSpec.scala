@@ -1,24 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.graph.ConnectedComponents
 
 /** Connected-components (large-star/small-star) properties: exact
   * labels vs a driver-side union-find on random graphs, chain/star/
   * cycle topologies, isolated nodes, and the dedup-cluster contract. */
-class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-graph-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GraphSpec extends SparkSuite {
 
   /** Reference union-find on the driver. */
   private def ufLabels(n: Long, edges: Seq[(Long, Long)]): Map[Long, Long] = {

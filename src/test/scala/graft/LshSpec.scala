@@ -1,26 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.text.TextOps
 import graft.vec.VectorOps
 
 /** Candidate-generation (LSH / banded-Hamming) operators: subset,
   * full-recall-in-guaranteed-regime, and measured-recall properties vs
   * their brute-force counterparts. */
-class LshSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-lsh-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class LshSpec extends SparkSuite {
 
   test("minhashFast == expression minhash (identical signatures)") {
     def sigs(df: org.apache.spark.sql.DataFrame) =

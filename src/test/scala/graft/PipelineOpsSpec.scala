@@ -1,25 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.text.TextOps
 import graft.vec.VectorOps
 
 /** Curation-pipeline operators (vocab, n-grams, split, quantization):
   * exact counts on a hand-checked corpus plus structural invariants. */
-class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-pipeops-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PipelineOpsSpec extends SparkSuite {
 
   private def docs = {
     import spark.implicits._

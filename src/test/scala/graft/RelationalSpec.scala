@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.ops.Relational
 
 /** Skyline / median-MAD / PMI properties vs brute-force driver
@@ -11,17 +8,7 @@ import graft.ops.Relational
   * DuckDB on the synth tables; these specs pin the semantics on
   * adversarial shapes (ties, duplicates, even/odd counts, coincident
   * maxima) the synth draw may not hit. */
-class RelationalSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-relational-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class RelationalSpec extends SparkSuite {
 
   private def skylineRef(pts: Seq[(Long, Long, Long)]): Set[(Long, Long, Long)] =
     pts.filter { a =>

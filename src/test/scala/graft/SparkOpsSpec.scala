@@ -1,26 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.core.Geom
 import graft.gen.Synth
 import graft.ops._
 import graft.table.Lineage
 import java.nio.file.Files
 
-class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SparkOpsSpec extends SparkSuite {
 
   private def images(n: Long): DataFrame = Synth.imagesRange(spark, n, 4)
   private def polys(m: Long): DataFrame = Synth.polygonsRange(spark, m)

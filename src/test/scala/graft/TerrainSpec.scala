@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.core.Codec
 import graft.gen.Synth
 import graft.ops.Terrain
@@ -12,17 +9,7 @@ import graft.ops.Terrain
   * (steepest drop, tie rule, pits), flow accumulation vs an inline
   * path-walk reference, and trend-sign recovery on a linear-in-t
   * stack. */
-class TerrainSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-terrain-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class TerrainSpec extends SparkSuite {
 
   private def enc(z: Array[Double], w: Int, h: Int): Array[Byte] =
     Codec.encode(Array(z), w, h, "raw-i16le")
@@ -115,6 +102,26 @@ class TerrainSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("watershed checkpoint residency is bounded, not O(rounds)") {
+    import spark.implicits._
+    // the bench's 96×4 ramp: one 96-cell flow path, 8 doubling rounds;
+    // each round must free the pointer generation it superseded
+    val w = 96; val h = 4
+    val z = Array.tabulate(w * h)(i => (100 + i % w).toDouble)
+    val dem = Seq((0L, "ramp", w.toLong, h.toLong, enc(z, w, h)))
+      .toDF("k", "image_id", "w", "h", "dem_bytes")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    Terrain.watershed(dem).count()
+    assert(Terrain.lastWatershedRounds == 8)
+    val leaked = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(leaked.size <= 2,
+      s"watershed left ${leaked.size} checkpointed RDDs after " +
+        s"${Terrain.lastWatershedRounds} rounds (expected ≤ 2 generations)")
+    for (id <- leaked; rdd <- sc.getPersistentRDDs.get(id))
+      rdd.unpersist(blocking = false)
+  }
+
   test("contourAgg: hand golden on a 2×2 checker column") {
     import spark.implicits._
     // z = (0,1 / 0,1), level 1: both horizontal edges cross, neither
@@ -170,7 +177,7 @@ class TerrainSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.getLong(2) == 0L) // +20 and −20 cancel
   }
 
-  test("costDistance == inline Dijkstra; rounds well under the bound") {
+  test("costDistance == inline Dijkstra") {
     import spark.implicits._
     val ks = Seq(7L, 13L, 25L)
     val rows = ks.map { k =>
@@ -219,10 +226,6 @@ class TerrainSpec extends AnyFunSuite with BeforeAndAfterAll {
         else assert(got((k, x, y)) == exp, s"k=$k ($x,$y)")
       }
     }
-    // the oracle floods 96 bounded rounds; the label correction must
-    // converge well inside that on the synth source density
-    assert(Terrain.lastCostRounds > 0 && Terrain.lastCostRounds < 48,
-      s"rounds=${Terrain.lastCostRounds}")
   }
 
   test("triRoughAgg: hand golden on a 3×3 DEM") {

@@ -1,25 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.ops.TimeJoins
 
 /** As-of and range joins vs brute-force evaluation on random data —
   * the bucketed/windowed plans must be RESULT-identical to the naive
   * quadratic definition. */
-class TimeJoinsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-timejoins-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class TimeJoinsSpec extends SparkSuite {
 
   private def ts(us: Long) = new java.sql.Timestamp(us / 1000)
 

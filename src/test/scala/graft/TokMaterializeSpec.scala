@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.text.TextOps
 
 /** Round-6 optimization pin: the gram/shingle builders materialize the
@@ -13,17 +11,7 @@ import graft.text.TextOps
   * un-materialized expression form and asserts row-identical results,
   * including the split edge cases (trailing spaces keep empty tokens,
   * docs shorter than the gram width, empty text). */
-class TokMaterializeSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tokmat-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class TokMaterializeSpec extends SparkSuite {
 
   // edge-heavy corpus: repeated substrings (dup spans), trailing space
   // (split keeps the empty token), single token, empty text, repeated
@@ -46,8 +34,9 @@ class TokMaterializeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def toks: Column = split(col("text"), " ")
 
-  private def rows(df: DataFrame): Set[String] =
-    df.collect().map(_.toString).toSet
+  // sorted multiset, so a duplicated or dropped row fails the compare
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
 
   test("ngramCounts == un-materialized expression form") {
     val n = 2

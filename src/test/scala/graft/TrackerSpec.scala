@@ -1,25 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.ops.Boxes
 
 /** IoU-tracker contract on hand-built scenarios: chain linking,
   * mid-sequence birth/death, mutual-best disambiguation, and the
   * chain invariant (≤1 incoming and ≤1 outgoing link per detection).
   */
-class TrackerSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tracker-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class TrackerSpec extends SparkSuite {
 
   private def det(rows: Seq[(String, Long, Long, Long, Long, Long, Long)]) = {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Tracks
 
 /** Invariant checks for the trajectory kernels on deterministic LCG
@@ -8,7 +7,7 @@ import graft.ops.Tracks
   * within ε of its enclosing simplified chord), convex-hull
   * containment + strict convexity, and the stay-point walk's radius/
   * size contracts. */
-class TracksSpec extends AnyFunSuite {
+class TracksSpec extends SparkSuite {
 
   private def lcg(seed: Long, n: Int, mod: Int): Array[Long] =
     Iterator.iterate(seed)(s => s * 6364136223846793005L + 1442695040888963407L)
@@ -71,22 +70,17 @@ class TracksSpec extends AnyFunSuite {
       a = j
     }
     // drive the udf through a local session for the packaging path
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").appName("tracks-test")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    try {
-      import spark.implicits._
-      import org.apache.spark.sql.functions._
-      val df = xs.indices.map(i => (1L, i.toLong, xs(i), ys(i)))
-        .toDF("user_id", "idx", "px", "py")
-        .groupBy("user_id")
-        .agg(collect_list(struct(col("idx"), col("px"), col("py")))
-          .as("pts"))
-        .select(Tracks.stayAgg(col("pts"), lit(r2), lit(minPts)).as("r"))
-      val row = df.collect()(0).getStruct(0)
-      assert(row.getLong(0) === stays)
-      assert(row.getLong(2) === spanSum)
-    } finally spark.stop()
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val df = xs.indices.map(i => (1L, i.toLong, xs(i), ys(i)))
+      .toDF("user_id", "idx", "px", "py")
+      .groupBy("user_id")
+      .agg(collect_list(struct(col("idx"), col("px"), col("py")))
+        .as("pts"))
+      .select(Tracks.stayAgg(col("pts"), lit(r2), lit(minPts)).as("r"))
+    val row = df.collect()(0).getStruct(0)
+    assert(row.getLong(0) === stays)
+    assert(row.getLong(2) === spanSum)
   }
 
   test("dtw: rolling-array kernel == memoized recursive definition") {
@@ -157,18 +151,13 @@ class TracksSpec extends AnyFunSuite {
       rx.indices.map(j => d2(txs(i), tys(i), rx(j), ry(j))).min).max
     val bwd = rx.indices.map(j =>
       (0 until n).map(i => d2(txs(i), tys(i), rx(j), ry(j))).min).max
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").appName("tracks-hausdorff-test")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    try {
-      import spark.implicits._
-      val pts = (0 until n).map(i => (1L, i.toLong, txs(i), tys(i)))
-        .toDF("user_id", "idx", "px", "py")
-      val row = Tracks.hausdorff(pts, rx, ry).collect()(0)
-      assert(row.getLong(1) === fwd)
-      assert(row.getLong(2) === bwd)
-      assert(row.getLong(3) === math.max(fwd, bwd))
-    } finally spark.stop()
+    import spark.implicits._
+    val pts = (0 until n).map(i => (1L, i.toLong, txs(i), tys(i)))
+      .toDF("user_id", "idx", "px", "py")
+    val row = Tracks.hausdorff(pts, rx, ry).collect()(0)
+    assert(row.getLong(1) === fwd)
+    assert(row.getLong(2) === bwd)
+    assert(row.getLong(3) === math.max(fwd, bwd))
   }
 
   test("odFlows: DataFrame op == brute first/last trip matrix") {
@@ -182,22 +171,17 @@ class TracksSpec extends AnyFunSuite {
     }
     val expect = trips.groupBy(identity).map { case (od, v) =>
       (od._1, od._2, od._3, od._4, v.size.toLong) }.toSeq.sorted
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").appName("tracks-odflows-test")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    try {
-      import spark.implicits._
-      val pts = (for (g <- 0 until groups; i <- 0 until per) yield
-        ((g % 3).toLong, (g / 3).toLong, i.toLong,
-          pxs(g * per + i), pys(g * per + i)))
-        .toDF("user_id", "day", "idx", "px", "py")
-      val got = Tracks.odFlows(pts, cell)
-        .orderBy("o_cx", "o_cy", "d_cx", "d_cy").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3), r.getLong(4))).toSeq
-      assert(got === expect)
-      // non-degenerate: at least one trip crosses cells
-      assert(expect.exists(p => p._1 != p._3 || p._2 != p._4))
-    } finally spark.stop()
+    import spark.implicits._
+    val pts = (for (g <- 0 until groups; i <- 0 until per) yield
+      ((g % 3).toLong, (g / 3).toLong, i.toLong,
+        pxs(g * per + i), pys(g * per + i)))
+      .toDF("user_id", "day", "idx", "px", "py")
+    val got = Tracks.odFlows(pts, cell)
+      .orderBy("o_cx", "o_cy", "d_cx", "d_cy").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getLong(4))).toSeq
+    assert(got === expect)
+    // non-degenerate: at least one trip crosses cells
+    assert(expect.exists(p => p._1 != p._3 || p._2 != p._4))
   }
 }

@@ -1,8 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Vision
 import graft.text.KmvSketch
@@ -12,16 +9,7 @@ import graft.text.KmvSketch
   * match a literal restatement of its definition on pseudo-random
   * inputs, and the KMV sketch must be merge-order-invariant with the
   * exact k-th-distinct semantics. Deterministic LCG inputs — no RNG. */
-class VisionPack2Spec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-visionpack2-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class VisionPack2Spec extends SparkSuite {
 
   private def lcg(seed: Long): Iterator[Long] =
     Iterator.iterate(seed)(s => (s * 6364136223846793005L + 1442695040888963407L))

@@ -1,8 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.core.Codec
 import graft.ops.Vision
@@ -14,16 +11,7 @@ import graft.ops.Vision
   * restatement of their definition on pseudo-random planes (with a
   * NaN nodata stripe where the kernel claims to skip nodata).
   * Deterministic LCG inputs — no RNG. */
-class VisionPack3Spec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-visionpack3-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class VisionPack3Spec extends SparkSuite {
 
   private def lcg(seed: Long): Iterator[Long] =
     Iterator.iterate(seed)(s => (s * 6364136223846793005L + 1442695040888963407L))

@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.core.Codec
 import graft.gen.Synth
 import graft.ops.Vision
@@ -11,16 +8,7 @@ import graft.ops.Vision
 /** Vision pack goldens: hand-computed 3×3/5×5 cases for the rank /
   * morphology / TPI kernels, an exact-match position check for NCC
   * template matching, and a step-edge Hough vote count. */
-class VisionSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-vision-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class VisionSpec extends SparkSuite {
 
   private def enc(z: Array[Double], w: Int, h: Int): Array[Byte] =
     Codec.encode(Array(z), w, h, "raw-i16le")

@@ -1,24 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.core.{Codec, Geom}
 import graft.ops.Warp
 
 /** Distributed warp_into: multi-image last-wins pixel merge and the
   * polygon cutline mask, against straightforward recomputation. */
-class WarpIntoSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-warpinto-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class WarpIntoSpec extends SparkSuite {
 
   /** Constant-plane image k at (x0m, y0m), w×h px, value v, with a
     * nodata stripe in columns x < nw. */

@@ -1,26 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.gen.Synth
 import graft.ops.Stats
 
 /** Zonal statistics: the distributed windowed kernel must agree with a
   * brute-force per-pixel center-in-rect evaluation on the same synth
   * images (window clamping — the scale optimization — changes nothing). */
-class ZonalSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-zonal-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ZonalSpec extends SparkSuite {
 
   // sf0.01: the smallest scale where small-raw images actually overlap
   // polygons (at sf0.001 the zonal result is legitimately empty)
