@@ -312,38 +312,56 @@ object SpatialJoin {
       .where(overlap && dedup)
   }
 
-  /** Small-image fast path: when every image extent ≤ cellSize(res)
-    * (true at res ≤ 7 for this engine's ≤1.02° footprints), an image's
-    * MIN-CORNER cell alone suffices as the join key if the polygon
-    * side pads its covering by one ring: overlap ⇒ the image's min
-    * corner lies within one cell of the polygon bbox. One row per
-    * image (no explode), each (image, polygon) candidate appears
-    * exactly once (no dedup predicate) — the map side is 2 shifts per
-    * row and the probe is a single broadcast-hash lookup. Requires
-    * caller-guaranteed max image extent; falls back to [[joinRects]]
-    * otherwise. */
+  /** Small-image fast path: one row per image through the join, keyed
+    * on the cell of the image's MIN CORNER alone (no image-side
+    * explode, no dedup predicate — each (image, polygon) candidate
+    * appears exactly once). The map side is 2 shifts per row and the
+    * probe is a single broadcast-hash lookup.
+    *
+    * `res` is the coarsest grid the caller accepts: it must hold every
+    * image (`maxImageExtentM ≤ cellSize(res)`, the caller's guarantee —
+    * otherwise use [[joinRects]]). The key grid is the FINEST `kr ≥ res`
+    * that still holds an image ([[keyRes]]; res 9 for the default
+    * 1024 mdeg), so the probe meets fewer polygons per cell.
+    *
+    * The polygon side pads its covering on the LOW side only
+    * ([[polyKeyCells]]): overlap needs x0m < px1m and x0m > px0m − w
+    * with w ≤ cellSize(kr), so the image's min-corner cell lies in the
+    * polygon's cells or one below/left of them, never above/right (same
+    * on y). */
   def joinRectsSmallImages(images: DataFrame, polys: DataFrame, res: Int = 7,
                            maxImageExtentM: Long = 1024): DataFrame = {
     require(maxImageExtentM <= CellGrid.cellSize(res),
       s"image extent exceeds cell size at res $res — use joinRects")
+    val kr = keyRes(res, maxImageExtentM)
     // single packed long key -> Spark picks the allocation-free
     // LongHashedRelation for the broadcast build (a two-column key
     // would fall back to the generic UnsafeHashedRelation and allocate
     // per probe row)
     val imgCells = images.withColumn("cell",
-      cellIx(col("x0m"), res) * CellGrid.IxMul + cellIy(col("y0m"), res))
-    val polCells = broadcast(polys
-      .withColumn("cix", explode(sequence(
-        cellIx(col("px0m"), res) - 1, cellIx(col("px1m") - 1, res) + 1)))
-      .withColumn("ciy", explode(sequence(
-        cellIy(col("py0m"), res) - 1, cellIy(col("py1m") - 1, res) + 1)))
-      .withColumn("cell", col("cix") * CellGrid.IxMul + col("ciy"))
-      .drop("cix", "ciy"))
+      cellIx(col("x0m"), kr) * CellGrid.IxMul + cellIy(col("y0m"), kr))
     val overlap =
       col("x0m") < col("px1m") && col("px0m") < col("x1m") &&
       col("y0m") < col("py1m") && col("py0m") < col("y1m")
-    imgCells.join(polCells, Seq("cell")).where(overlap)
+    imgCells.join(broadcast(polyKeyCells(polys, kr)), Seq("cell"))
+      .where(overlap).drop("cell")
   }
+
+  /** Finest resolution `≥ res` whose cell edge is at least `maxExtentM`. */
+  private[graft] def keyRes(res: Int, maxExtentM: Long): Int =
+    (res to CellGrid.Shift).takeWhile(CellGrid.cellSize(_) >= maxExtentM).last
+
+  /** Polygon build side of [[joinRectsSmallImages]]: one row per cell
+    * of the polygon's covering at `kr` plus one ring below and left,
+    * with the packed key in `cell`. */
+  private[graft] def polyKeyCells(polys: DataFrame, kr: Int): DataFrame =
+    polys
+      .withColumn("cix", explode(sequence(
+        cellIx(col("px0m"), kr) - 1, cellIx(col("px1m") - 1, kr))))
+      .withColumn("ciy", explode(sequence(
+        cellIy(col("py0m"), kr) - 1, cellIy(col("py1m") - 1, kr))))
+      .withColumn("cell", col("cix") * CellGrid.IxMul + col("ciy"))
+      .drop("cix", "ciy")
 
   /** Anti-join: images matching NO polygon (reference analog: features
     * with empty intersections map). */

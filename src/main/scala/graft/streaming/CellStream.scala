@@ -105,7 +105,10 @@ object CellStream {
               out += ((cell, d, x, anom))
             }
             // late/duplicate days (i <= idx) are ignored: the batch
-            // pass owns corrections, ingest state only moves forward
+            // pass owns corrections, ingest state only moves forward.
+            // A day repeated within one micro-batch keeps its smallest
+            // count (the (day, count) sort meets it first); across
+            // micro-batches the first arrival wins.
           }
           state.update((day0, idx, t))
           out.iterator

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.Geom
 import graft.gen.Synth
+import graft.index.CellGrid
 import graft.ops._
 import graft.table.Lineage
 import java.nio.file.Files
@@ -38,6 +39,61 @@ class SparkOpsSpec extends SparkSuite {
       .groupBy("image_id", "fid").count()
       .agg(max("count")).collect()(0).getLong(0)
     assert(cnt == 1L)
+  }
+
+  test("joinRectsSmallImages: exact at cell boundaries for key grids res 7, 8, 9") {
+    val overlap = col("x0m") < col("px1m") && col("px0m") < col("x1m") &&
+      col("y0m") < col("py1m") && col("py0m") < col("y1m")
+    def pairs(df: DataFrame) =
+      df.select("k", "fid").collect().map(r => (r.getLong(0), r.getLong(1)))
+    for ((ext, kr) <- Seq(4096L -> 7, 2048L -> 8, 1024L -> 9)) {
+      assert(SpatialJoin.keyRes(7, ext) == kr)
+      val cs = CellGrid.cellSize(kr)
+      // cell boundaries near the origin at kr, in mdeg
+      val bx = (CellGrid.OffX / cs + 1) * cs - CellGrid.OffX
+      val by = (CellGrid.OffY / cs + 1) * cs - CellGrid.OffY
+      def edges(b: Long, ds: Seq[Int]) =
+        for (d <- ds; e <- Seq(-1L, 0L, 1L)) yield b + d * cs + e
+      // images of extent 1, cs−1, cs with min corners at boundaries ±1
+      def imgIv(b: Long) =
+        for (s <- edges(b, -1 to 1); w <- Seq(1L, cs - 1, cs)) yield (s, s + w)
+      // polygons also end on a boundary ±1 one or two cells below an
+      // image's min corner, and some only touch an image
+      def polIv(b: Long) =
+        for (s <- edges(b, -2 to 1); w <- Seq(1L, cs - 1, cs, 2 * cs)) yield (s, s + w)
+      val im = spark.createDataFrame(
+        for (((x0, x1), (y0, y1)) <- imgIv(bx).flatMap(x => imgIv(by).map((x, _))))
+          yield (x0, y0, x1, y1))
+        .toDF("x0m", "y0m", "x1m", "y1m").withColumn("k", monotonically_increasing_id())
+        .cache()
+      val po = spark.createDataFrame(
+        for (((x0, x1), (y0, y1)) <- polIv(bx).flatMap(x => polIv(by).map((x, _))))
+          yield (x0, y0, x1, y1))
+        .toDF("px0m", "py0m", "px1m", "py1m").withColumn("fid", monotonically_increasing_id())
+        .cache()
+      val brute = pairs(im.crossJoin(po).where(overlap)).toSet
+      val got = pairs(SpatialJoin.joinRectsSmallImages(im, po, 7, ext))
+      val (missing, extra) = (brute -- got, got.toSet -- brute)
+      assert(brute.nonEmpty)
+      assert(missing.size + extra.size == 0,
+        s"extent $ext: missing ${missing.take(3)}, extra ${extra.take(3)}")
+      assert(got.length == got.toSet.size, s"duplicate pairs at extent $ext")
+      intercept[IllegalArgumentException](
+        SpatialJoin.joinRectsSmallImages(im, po, kr + 1, ext))
+    }
+  }
+
+  test("joinRectsSmallImages build side pads one ring below and left only") {
+    val po = polys(40)
+    val kr = SpatialJoin.keyRes(7, 1024)
+    val expect = po.collect().map { r =>
+      val (x0, y0) = (r.getAs[Long]("px0m"), r.getAs[Long]("py0m"))
+      val (x1, y1) = (r.getAs[Long]("px1m"), r.getAs[Long]("py1m"))
+      val nx = CellGrid.ix(kr, x1 - 1) - CellGrid.ix(kr, x0) + 1
+      val ny = CellGrid.iy(kr, y1 - 1) - CellGrid.iy(kr, y0) + 1
+      (nx + 1) * (ny + 1)
+    }.sum
+    assert(SpatialJoin.polyKeyCells(po, kr).count() == expect)
   }
 
   test("headline join+tile plan shape: no shuffle, broadcast-only exchange") {

@@ -7,6 +7,8 @@ import duckdb
 
 sfdir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 outdir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify1"
+# optional 3rd arg: comma-list of query names, as Verify's
+only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
 
 con = duckdb.connect()
 for t in ["region","nation","customer","supplier","part","orders",
@@ -15,7 +17,11 @@ for t in ["region","nation","customer","supplier","part","orders",
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
 fails = 0
+for name in sorted((only or set()) - oracle.keys()):
+    print(f"{name}: NO oracle SQL"); fails += 1
 for name, sql in sorted(oracle.items()):
+    if only is not None and name not in only:
+        continue
     files = glob.glob(f"{outdir}/{name}/*.parquet")
     if not files:
         print(f"{name}: MISSING spark result"); fails += 1; continue
