@@ -328,9 +328,9 @@ object Bench {
       corpusBands, docsTbl, deltaOf(1000), 0.5).count())
 
     // Terrain iteration-count evidence: on a ramp DEM the flow path
-    // length is ~the image width, so frontier-propagation accumulation
-    // must take ~width rounds while pointer-doubling watershed takes
-    // ~log2(width) — measured, not asserted.
+    // length is ~the image width, so frontier propagation would take
+    // ~width rounds while pointer-doubling accumulation and watershed
+    // take ~log2(width) — measured, not asserted.
     val (accRounds, wsRounds, rampLen) = {
       import spark.implicits._
       val rw = 96; val rh = 4
@@ -338,10 +338,11 @@ object Bench {
       val dem = Seq((0L, "ramp", rw.toLong, rh.toLong,
           graft.core.Codec.encode(Array(p), rw, rh, "raw-i16le")))
         .toDF("k", "image_id", "w", "h", "dem_bytes")
-      graft.ops.Terrain.flowAccum(dem).count()
-      graft.ops.Terrain.watershed(dem).count()
-      (graft.ops.Terrain.lastAccumRounds,
-       graft.ops.Terrain.lastWatershedRounds, rw)
+      val (acc, accN) = graft.ops.Terrain.flowAccumRounds(dem)
+      acc.count()
+      val (ws, wsN) = graft.ops.Terrain.watershedRounds(dem)
+      ws.count()
+      (accN, wsN, rw)
     }
 
     // Integral-image cost model: the SAT box kernel must be radius-
@@ -746,8 +747,8 @@ object Bench {
          |path; the DuckDB oracle replays the naive scan.
          |
          |Terrain iteration counts on a ${rampLen}-cell-path ramp DEM
-         |(measured shuffle rounds): flow ACCUMULATION (frontier
-         |propagation, inherently path-length-bound) $accRounds rounds;
+         |(measured shuffle rounds): flow ACCUMULATION (pointer-doubling
+         |ancestor counting) $accRounds rounds;
          |WATERSHED (pointer doubling) $wsRounds rounds ≈
          |log2($rampLen) — at a 10³-cell real-DEM path that is ~10
          |shuffles instead of ~10³.

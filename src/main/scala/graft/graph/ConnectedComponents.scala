@@ -26,8 +26,8 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
-  /** Canonicalize to undirected unique edges u < v. */
-  private def canon(pairs: DataFrame): DataFrame =
+  /** Canonical undirected unique edges (u < v) from an id pair list. */
+  def canonEdges(pairs: DataFrame): DataFrame =
     pairs.toDF("a", "b")
       .where(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("u"),
@@ -76,17 +76,21 @@ object ConnectedComponents {
     (c, (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1)))
   }
 
-  /** Rounds taken by the most recent [[starEdges]] call (diagnostic —
-    * read by GraphSpec's one-action-per-round assertion). */
-  @volatile var lastRounds: Int = 0
-
   /** One large-star + small-star round over a canonical edge set —
     * exposed for plan inspection (PlanDump) and round-level tests; the
     * fixpoint loop is [[starEdges]]. */
   def starRound(edges: DataFrame): DataFrame = smallStar(largeStar(edges))
 
-  /** Canonical undirected unique edges (u < v) from an id pair list. */
-  def canonEdges(pairs: DataFrame): DataFrame = canon(pairs)
+  /** Both directions (src, dst) of canonical edges (u, v) — the
+    * directed edge list of the graph family. Left unmaterialized so
+    * consumers keep Catalyst's size statistics (see
+    * [[LabelProp.linkPredict]]). */
+  def symEdges(und: DataFrame): DataFrame =
+    und.select(col("u").as("src"), col("v").as("dst"))
+      .unionAll(und.select(col("v").as("src"), col("u").as("dst")))
+
+  /** Round cap of [[starEdges]] (rounds observed: O(log n)). */
+  private val MaxRounds = 50
 
   /** Run star rounds until the edge set is a fixpoint; returns the
     * star edges (node → its component min, for every non-min node).
@@ -98,35 +102,25 @@ object ConnectedComponents {
     * analysis/codegen cost explodes long before data does). On a real
     * cluster swap in reliable `checkpoint()` (or a per-round Lineage
     * table write) so a lost executor can't lose a round. */
-  def starEdges(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
-    // each round's lazy checkpoint is materialized by its fingerprint
-    // job, so the previous generation is provably dead at commit() —
-    // freed on the spot instead of leaking one block set per round
-    // into the session (graft.ops.Ckpt scaladoc; guide §5)
-    val gen = new graft.ops.CheckpointGen(pairs.sparkSession.sparkContext)
-    var (e, fp) = ckptFingerprint(canon(pairs))
-    gen.commit()
-    var done = false
-    var it = 0
-    while (!done && it < maxIter) {
-      val (next, nfp) = ckptFingerprint(smallStar(largeStar(e)))
-      gen.commit()
-      e = next
-      done = nfp == fp
-      fp = nfp
-      it += 1
+  def starEdges(pairs: DataFrame): DataFrame = starEdgesRounds(pairs)._1
+
+  /** [[starEdges]] and the number of star rounds it ran. */
+  private[graft] def starEdgesRounds(pairs: DataFrame): (DataFrame, Int) = {
+    val ((e, _), n, done) = graft.ops.Rounds.untilStable(
+        pairs.sparkSession.sparkContext, MaxRounds)(
+        ckptFingerprint(canonEdges(pairs))) { case (e, fp) =>
+      val (next, nfp) = ckptFingerprint(starRound(e))
+      ((next, nfp), nfp == fp)
     }
-    lastRounds = it
-    require(done, s"connectedComponents did not converge in $maxIter rounds")
-    e
+    require(done, s"connectedComponents did not converge in $n rounds")
+    (e, n)
   }
 
   /** (id, comp) for EVERY node in `nodes` (single id column): comp =
     * min id of the node's component; isolated nodes map to themselves. */
-  def components(nodes: DataFrame, pairs: DataFrame,
-                 maxIter: Int = 50): DataFrame = {
+  def components(nodes: DataFrame, pairs: DataFrame): DataFrame = {
     // converged star edges are canonical (u = component min, v = member)
-    val stars = starEdges(pairs, maxIter)
+    val stars = starEdges(pairs)
       .select(col("u").as("comp"), col("v").as("id"))
     nodes.toDF("id")
       .join(stars, Seq("id"), "left")

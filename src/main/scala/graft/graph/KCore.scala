@@ -28,9 +28,6 @@ import org.apache.spark.sql.functions._
   */
 object KCore {
 
-  /** Rounds taken by the most recent [[kcore]] call (diagnostic). */
-  @volatile var lastRounds: Int = 0
-
   /** Survivors of the k-core peel with their within-core degree.
     *
     * @param pairs edge list (two id columns, any names); self-loops
@@ -42,12 +39,16 @@ object KCore {
     *              in sync.
     * @return (v, coredeg) for every node in the k-core, coredeg ≥ k
     */
-  def kcore(pairs: DataFrame, k: Int, maxRounds: Int = 12): DataFrame = {
+  def kcore(pairs: DataFrame, k: Int, maxRounds: Int = 12): DataFrame =
+    kcoreRounds(pairs, k, maxRounds)._1
+
+  /** [[kcore]] and the number of peel rounds it ran. */
+  private[graft] def kcoreRounds(pairs: DataFrame, k: Int,
+                                 maxRounds: Int): (DataFrame, Int) = {
     require(k >= 1, "k-core needs k >= 1")
-    val canon = ConnectedComponents.canonEdges(pairs)
     // symmetrize once; the peel keeps edges whose BOTH endpoints live
-    var sym = canon.select(col("u").as("src"), col("v").as("dst"))
-      .unionAll(canon.select(col("v").as("src"), col("u").as("dst")))
+    val sym = ConnectedComponents.symEdges(
+      ConnectedComponents.canonEdges(pairs))
     // one action per round: the edge-count job materializes the
     // lazily-checkpointed pruned edge set. The peel is MONOTONE
     // (edges are only ever removed), so an unchanged edge count is a
@@ -56,30 +57,23 @@ object KCore {
       val c = e.localCheckpoint(false)
       (c, c.count())
     }
-    // per-round checkpoints are materialized by the edge-count job —
-    // free the superseded generation each round (Ckpt scaladoc)
-    val gen = new graft.ops.CheckpointGen(pairs.sparkSession.sparkContext)
-    var (cur, cfp) = fp(sym)
-    gen.commit()
-    var done = cfp == 0
-    var it = 0
-    while (!done && it < maxRounds) {
-      val deg = cur.groupBy("src").agg(count(lit(1)).as("dg"))
-      val keep = deg.where(col("dg") >= k).select("src")
-      val pruned = cur
-        .join(keep, "src")
-        .join(keep.select(col("src").as("dst")), "dst")
-        .select("src", "dst")
-      val (next, nfp) = fp(pruned)
-      gen.commit()
-      cur = next
-      done = nfp == cfp || nfp == 0
-      cfp = nfp
-      it += 1
+    // a capped peel keeps its result: the oracle unrolls exactly
+    // maxRounds rounds, so both stop at the same edge set
+    val ((cur, _), n, _) = graft.ops.Rounds.untilStable(
+        pairs.sparkSession.sparkContext, maxRounds)(fp(sym)) {
+      case s @ (_, 0L) => (s, true) // nothing left to peel: no job
+      case (cur, cfp) =>
+        val deg = cur.groupBy("src").agg(count(lit(1)).as("dg"))
+        val keep = deg.where(col("dg") >= k).select("src")
+        val pruned = cur
+          .join(keep, "src")
+          .join(keep.select(col("src").as("dst")), "dst")
+          .select("src", "dst")
+        val (next, nfp) = fp(pruned)
+        ((next, nfp), nfp == cfp || nfp == 0)
     }
-    lastRounds = it
-    cur.groupBy(col("src").as("v"))
+    (cur.groupBy(col("src").as("v"))
       .agg(count(lit(1)).cast("long").as("coredeg"))
-      .where(col("coredeg") >= k)
+      .where(col("coredeg") >= k), n)
   }
 }

@@ -37,10 +37,8 @@ object LabelProp {
     *
     * Returns one row per node in the edge set: (v, lab). */
   def labelProp(pairs: DataFrame, rounds: Int): DataFrame = {
-    val canon = ConnectedComponents.canonEdges(pairs)
-    val sym = canon.select(col("u").as("src"), col("v").as("dst"))
-      .unionAll(canon.select(col("v").as("src"), col("u").as("dst")))
-      .localCheckpoint(false)
+    val sym = ConnectedComponents.symEdges(
+      ConnectedComponents.canonEdges(pairs)).localCheckpoint(false)
     var lab = sym.select(col("src").as("v")).distinct()
       .select(col("v"), col("v").as("lab"))
     var t = 0
@@ -77,9 +75,8 @@ object LabelProp {
     * explode + map-side-combined count. Nodes with deg < 2 emit
     * coef 0. Returns (v, deg, tri, coef_scaled). */
   def clusteringCoef(pairs: DataFrame): DataFrame = {
-    val und = ConnectedComponents.canonEdges(pairs)
-    val dir = und.select(col("u").as("src"), col("v").as("dst"))
-      .unionAll(und.select(col("v").as("src"), col("u").as("dst")))
+    val dir = ConnectedComponents.symEdges(
+      ConnectedComponents.canonEdges(pairs))
     val deg = dir.groupBy("src").agg(count(lit(1)).as("deg"))
     // total order ord = deg·2^40 + id (ids < 2^40), orient low→high.
     // BOUND (ADVICE r5): the packed key needs deg < 2^23 (~8.4M) on
@@ -132,8 +129,7 @@ object LabelProp {
     * plan loses stats and demotes the small-side joins to shuffles. */
   def linkPredict(pairs: DataFrame, topK: Int): DataFrame = {
     val und = ConnectedComponents.canonEdges(pairs)
-    val dir = und.select(col("u").as("src"), col("v").as("dst"))
-      .unionAll(und.select(col("v").as("src"), col("u").as("dst")))
+    val dir = ConnectedComponents.symEdges(und)
     val deg = dir.groupBy("src").agg(count(lit(1)).as("deg"))
     val cn = dir.select(col("src").as("m"), col("dst").as("a"))
       .join(dir.select(col("src").as("m"), col("dst").as("b")), Seq("m"))

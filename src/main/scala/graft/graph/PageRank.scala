@@ -34,12 +34,8 @@ object PageRank {
 
   def pagerankInt(pairs: DataFrame, iters: Int,
                   scale: Long = 1000000L): DataFrame = {
-    val und = pairs.toDF("a", "b").where(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("u"),
-              greatest(col("a"), col("b")).as("v"))
-      .distinct()
-    val dir = und.select(col("u").as("src"), col("v").as("dst"))
-      .unionAll(und.select(col("v").as("src"), col("u").as("dst")))
+    val dir = ConnectedComponents.symEdges(
+      ConnectedComponents.canonEdges(pairs))
     val deg = dir.groupBy("src").agg(count(lit(1)).as("deg"))
     var pr = deg.select(col("src").as("nd"), lit(scale).as("pr"))
     var t = 0

@@ -25,12 +25,6 @@ import graft.core.Codec
   */
 object Terrain {
 
-  /** Instrumentation: shuffle-round counts of the last flowAccum /
-    * watershed call on this JVM (read by the bench to evidence the
-    * linear-vs-log round scaling claim; not part of any result). */
-  @volatile var lastAccumRounds: Int = 0
-  @volatile var lastWatershedRounds: Int = 0
-
   /** Horn-kernel neighbor weights: dzdx = Σ z(x+dx,y+dy)·dx·(2−|dy|),
     * dzdy = Σ z(x+dx,y+dy)·dy·(2−|dx|) over the 3×3 window — the
     * ±1/±2 stencil stated multiplicatively (what the oracle SQL
@@ -295,7 +289,12 @@ object Terrain {
     *
     * Input: dem table (k, image_id, w, h, dem_bytes). Output: one row
     * per CELL (k, image_id, x, y, acc). */
-  def flowAccum(dem: DataFrame): DataFrame = {
+  def flowAccum(dem: DataFrame): DataFrame = flowAccumRounds(dem)._1
+
+  /** [[flowAccum]] and the number of doubling rounds it ran. Stays off
+    * [[Rounds]]: each round's probe and the final count read every
+    * round's pairs slice, so no generation is ever superseded. */
+  private[graft] def flowAccumRounds(dem: DataFrame): (DataFrame, Int) = {
     val meta = dem.select(col("k"), col("image_id"))
     val cells = dem
       .withColumn("e", explode(flowPtrUdf(col("dem_bytes"),
@@ -310,18 +309,16 @@ object Terrain {
       .localCheckpoint()
     var far = pairs.select(col("k"), col("ux"), col("uy"),
       col("ax").as("fx"), col("ay").as("fy"))
-    lastAccumRounds = 0
+    var rounds = 0
     var nFar = far.count()
     while (nFar > 0) {
-      lastAccumRounds += 1
+      rounds += 1
       // ONE compose join per round: the probe side unions pairs
       // (→ new ancestor pairs at distances (2^i, 2^{i+1}]) with far
       // itself tagged isfar (→ the squared 2^{i+1}-pointer), so each
       // round is a single shuffle-join + checkpoint job plus a cheap
       // block-scan count — the two-join form paid two checkpoint
-      // jobs per round. Each round's checkpoint stays alive as the
-      // backing of its pairs slice (the final count reads every
-      // slice), so residency is bounded by what the result needs.
+      // jobs per round.
       val probe = pairs
         .select(col("k"), col("ux").as("fx"), col("uy").as("fy"),
           col("ax"), col("ay"), lit(false).as("isfar"))
@@ -343,10 +340,10 @@ object Terrain {
     val ups = pairs
       .groupBy(col("k"), col("ax").as("x"), col("ay").as("y"))
       .agg(count(lit(1)).as("ups"))
-    cells.join(ups, Seq("k", "x", "y"), "left")
+    (cells.join(ups, Seq("k", "x", "y"), "left")
       .join(broadcast(meta), Seq("k"))
       .select(col("k"), col("image_id"), col("x"), col("y"),
-        (coalesce(col("ups"), lit(0L)) + 1L).as("acc"))
+        (coalesce(col("ups"), lit(0L)) + 1L).as("acc")), rounds)
   }
 
   /** WATERSHED basin labeling: every cell labeled by the PIT its flow
@@ -363,23 +360,26 @@ object Terrain {
     * convergence = a round that changes no pointer.
     *
     * Output: one row per cell (k, image_id, x, y, px, py). */
-  def watershed(dem: DataFrame): DataFrame = {
+  def watershed(dem: DataFrame): DataFrame = watershedRounds(dem)._1
+
+  /** Round cap of [[watershed]]: a flow path visits at most w·h < 2^32
+    * cells, so doubling reaches every pit within 32 rounds, plus the
+    * round that moves no pointer: ceil(log2(w·h)) + 1 ≤ 33. */
+  private val WatershedMaxRounds = 33
+
+  /** [[watershed]] and the number of doubling rounds it ran. */
+  private[graft] def watershedRounds(dem: DataFrame): (DataFrame, Int) = {
     val meta = dem.select(col("k"), col("image_id"))
-    // superseded pointer generations are freed each round (Ckpt)
-    val gen = new CheckpointGen(dem.sparkSession.sparkContext)
     // initial pointer: flow target, or self for pits — one decode
     // pass, no grid⋈edges seed join
-    var ptr = dem
-      .withColumn("e", explode(flowPtrUdf(col("dem_bytes"),
-        col("w").cast("int"), col("h").cast("int"))))
-      .select(col("k"), col("e._1").as("x"), col("e._2").as("y"),
-        col("e._3").as("px"), col("e._4").as("py"))
-      .localCheckpoint()
-    gen.commit()
-    var changed = 1L
-    lastWatershedRounds = 0
-    while (changed > 0) {
-      lastWatershedRounds += 1
+    val (ptr, n, done) = Rounds.untilStable(
+        dem.sparkSession.sparkContext, WatershedMaxRounds)(
+      dem
+        .withColumn("e", explode(flowPtrUdf(col("dem_bytes"),
+          col("w").cast("int"), col("h").cast("int"))))
+        .select(col("k"), col("e._1").as("x"), col("e._2").as("y"),
+          col("e._3").as("px"), col("e._4").as("py"))
+        .localCheckpoint()) { ptr =>
       val hop = ptr.select(col("k"), col("x").as("px"), col("y").as("py"),
         col("px").as("qx"), col("py").as("qy"))
       // the moved flag rides the checkpointed round itself, so
@@ -390,13 +390,12 @@ object Terrain {
           col("qx").as("px"), col("qy").as("py"),
           (col("qx") =!= col("px") || col("qy") =!= col("py")).as("moved"))
         .localCheckpoint()
-      changed = next.where(col("moved")).count()
-      gen.commit()
-      ptr = next.drop("moved")
+      (next.drop("moved"), next.where(col("moved")).count() == 0)
     }
-    ptr.join(broadcast(meta), Seq("k"))
+    require(done, s"watershed did not converge in $n rounds")
+    (ptr.join(broadcast(meta), Seq("k"))
       .select(col("k"), col("image_id"), col("x"), col("y"),
-        col("px"), col("py"))
+        col("px"), col("py")), n)
   }
 
   /** Per-image multi-source Dijkstra kernel for [[costDistance]]:

@@ -1148,45 +1148,38 @@ object TextOps {
   def bpeTrain(docs: DataFrame, rounds: Int): (DataFrame, DataFrame) = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val sc = spark.sparkContext
-    val np = sc.defaultParallelism
-    // Checkpoint-block hygiene: each round replaces the words/pc vars,
-    // but the superseded rounds' localCheckpoint blocks stay pinned in
-    // the block manager — at a real 32k-merge vocab that is 32k leaked
-    // block sets (an executor-memory OOM, and it measurably depressed
-    // unrelated queries in the same JVM). Each round's checkpoints are
-    // EAGER, so by the end of the round its generation is fully
-    // materialized with truncated lineage and the previous generation
-    // is provably unreferenced — freed on the spot, bounding residency
-    // at one generation for any `rounds`. (Lazy checkpoints can NOT be
-    // freed a fixed number of rounds behind: in the sparse branch the
-    // new words table is not an ancestor of the argmax collect, so its
-    // checkpoint may stay unmaterialized with live lineage into
-    // arbitrarily old generations.) The final generation stays
-    // persisted for the caller.
-    def persistedIds = sc.getPersistentRDDs.keySet.toSet
-    val foreign = persistedIds
-    var words = bpeWords(docs).localCheckpoint()
-    val totalWords = words.count()
-    var pc = bpePairCounts(words).localCheckpoint()
-    var live = persistedIds -- foreign
+    val np = spark.sparkContext.defaultParallelism
+    // Every checkpoint below is EAGER, so a round's generation has
+    // materialized when the round ends and Rounds frees the one it
+    // superseded (at a real 32k-merge vocab, leaked block sets are an
+    // executor-memory OOM). Lazy checkpoints could NOT be freed: in the
+    // sparse branch the new words table is not an ancestor of the
+    // argmax collect, so its checkpoint may stay unmaterialized with
+    // live lineage into arbitrarily old generations. A round with no
+    // pair left stops the loop.
+    var totalWords = 0L
     val merges = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
-    for (r <- 1 to rounds) {
+    val ((words, _), _, _) = graft.ops.Rounds.untilStable(
+        spark.sparkContext, rounds) {
+      val words = bpeWords(docs).localCheckpoint()
+      totalWords = words.count()
+      (words, bpePairCounts(words).localCheckpoint())
+    } { case (words, pc) =>
       val top = pc.orderBy(col("c").desc, col("l"), col("r"))
         .limit(1).collect()
-      if (top.nonEmpty) {
+      if (top.isEmpty) ((words, pc), true)
+      else {
         val (l, rr, c) = (top(0).getString(0), top(0).getString(1),
           top(0).getLong(2))
-        merges += ((r.toLong, l, rr, c))
+        merges += ((merges.size + 1L, l, rr, c))
         val needle = s"|$l||$rr|"
-        val preRound = persistedIds
         if (c >= totalWords / 3) {
           // dense merge: one full rewrite + recount beats two
           // affected-set recounts that would cover most of the vocab
-          words = words.withColumn("wstr",
+          val w2 = words.withColumn("wstr",
             replace(col("wstr"), lit(needle), lit(s"|$l$rr|")))
             .localCheckpoint()
-          pc = bpePairCounts(words).localCheckpoint()
+          ((w2, bpePairCounts(w2).localCheckpoint()), false)
         } else {
           val affected = words.where(col("wstr").contains(needle))
             .localCheckpoint()
@@ -1200,18 +1193,15 @@ object TextOps {
               (coalesce(col("cn"), lit(0L)) - coalesce(col("co"), lit(0L)))
                 .as("d"))
             .where(col("d") =!= 0)
-          pc = pc.join(delta, Seq("l", "r"), "full_outer")
+          val pc2 = pc.join(delta, Seq("l", "r"), "full_outer")
             .select(col("l"), col("r"),
               (coalesce(col("c"), lit(0L)) + coalesce(col("d"), lit(0L)))
                 .as("c"))
             .where(col("c") > 0).localCheckpoint()
-          words = words.where(!col("wstr").contains(needle))
+          val w2 = words.where(!col("wstr").contains(needle))
             .unionByName(rewritten).coalesce(np).localCheckpoint()
+          ((w2, pc2), false)
         }
-        val fresh = persistedIds -- preRound
-        for (id <- live; rdd <- sc.getPersistentRDDs.get(id))
-          rdd.unpersist(blocking = false)
-        live = fresh
       }
     }
     (merges.toSeq.toDF("round", "left", "right", "cnt"), words)

@@ -93,13 +93,15 @@ class GraphSpec extends SparkSuite {
         e = next; done = nf == f; f = nf
       }
     }
+    var rounds = 0
     val jFused = countJobs {
-      ConnectedComponents.starEdges(pairs).count()
+      val (e, n) = ConnectedComponents.starEdgesRounds(pairs)
+      rounds = n
+      e.count()
     }
     val jEager = countJobs { eagerRounds() }
-    info(s"jobs: fused=$jFused eager+separate=$jEager " +
-      s"(rounds=${ConnectedComponents.lastRounds})")
-    assert(ConnectedComponents.lastRounds >= 1)
+    info(s"jobs: fused=$jFused eager+separate=$jEager (rounds=$rounds)")
+    assert(rounds >= 1)
     // the fused loop must schedule strictly fewer jobs than the eager
     // reference on the same input (one materializing aggregate per
     // round vs checkpoint-job + fingerprint-job)
@@ -204,15 +206,50 @@ class GraphSpec extends SparkSuite {
     // chain 0-1-2-...-9 has max degree 2 → empty 3-core
     val chain = (0L until 9L).map(i => (i, i + 1))
     assert(graft.graph.KCore.kcore(chain.toDF("a", "b"), 3).count() === 0)
+    // self-loops only (`* 1` keeps the optimizer from folding them
+    // away): no edge survives canonicalization, so no peel job runs
+    val loops = spark.range(8).select($"id".as("a"), ($"id" * 1).as("b"))
+    assert(graft.graph.KCore.kcore(loops, 1).count() === 0)
     // K5 plus a pendant: the 3-core is exactly the K5, degree 4 each
     val k5 = for (i <- 0L until 5L; j <- (i + 1) until 5L) yield (i, j)
-    val got = graft.graph.KCore.kcore((k5 :+ (0L, 99L)).toDF("a", "b"), 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val (core, rounds) =
+      graft.graph.KCore.kcoreRounds((k5 :+ (0L, 99L)).toDF("a", "b"), 3, 12)
+    val got = core.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got === (0L until 5L).map(_ -> 4L).toMap)
     // the gate's oracle unrolls KCoreRounds=12 — a 3-core that takes
     // longer to converge than that would silently diverge; the peel
     // above converges in ≤ a handful of rounds
-    assert(graft.graph.KCore.lastRounds <= 12)
+    assert(rounds <= 12)
+  }
+
+  test("starEdges and kcore checkpoint residency is bounded, not O(rounds)") {
+    import spark.implicits._
+    // chains take several star rounds and several peel rounds (k = 2
+    // peels one end node per side per round: 5 rounds for 10 nodes);
+    // each round must free the generation it superseded
+    def chain(n: Long) = (0L until n - 1).map(i => (i, i + 1)).toDF("a", "b")
+    val sc = spark.sparkContext
+    def leakedBy(body: => Int): (Set[Int], Int) = {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val n = body
+      (sc.getPersistentRDDs.keySet.toSet -- before, n)
+    }
+    val runs = Seq(
+      "starEdges" -> leakedBy {
+        val (e, n) = ConnectedComponents.starEdgesRounds(chain(40))
+        assert(e.count() === 39L); n
+      },
+      "kcore" -> leakedBy {
+        val (c, n) = graft.graph.KCore.kcoreRounds(chain(10), 2, 12)
+        assert(c.count() === 0L); n
+      })
+    for ((op, (leaked, n)) <- runs) {
+      assert(n >= 3, s"$op took $n rounds")
+      assert(leaked.size <= 2, s"$op left ${leaked.size} checkpointed " +
+        s"RDDs after $n rounds (expected ≤ 2 generations)")
+      for (id <- leaked; rdd <- sc.getPersistentRDDs.get(id))
+        rdd.unpersist(blocking = false)
+    }
   }
 
   /** Driver-side synchronous LPA with the same (count desc, lab asc)

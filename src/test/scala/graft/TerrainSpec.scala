@@ -104,20 +104,25 @@ class TerrainSpec extends SparkSuite {
 
   test("watershed checkpoint residency is bounded, not O(rounds)") {
     import spark.implicits._
-    // the bench's 96×4 ramp: one 96-cell flow path, 8 doubling rounds;
-    // each round must free the pointer generation it superseded
+    // the bench's 96×4 ramp: one 96-cell flow path, 8 doubling rounds
+    // (7 for flowAccum, which needs no confirming round); each
+    // watershed round must free the pointer generation it superseded
     val w = 96; val h = 4
     val z = Array.tabulate(w * h)(i => (100 + i % w).toDouble)
     val dem = Seq((0L, "ramp", w.toLong, h.toLong, enc(z, w, h)))
       .toDF("k", "image_id", "w", "h", "dem_bytes")
+    val (acc, accRounds) = Terrain.flowAccumRounds(dem)
+    assert(acc.count() == w * h)
+    assert(accRounds == 7)
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet.toSet
-    Terrain.watershed(dem).count()
-    assert(Terrain.lastWatershedRounds == 8)
+    val (ws, rounds) = Terrain.watershedRounds(dem)
+    ws.count()
+    assert(rounds == 8)
     val leaked = sc.getPersistentRDDs.keySet.toSet -- before
     assert(leaked.size <= 2,
       s"watershed left ${leaked.size} checkpointed RDDs after " +
-        s"${Terrain.lastWatershedRounds} rounds (expected ≤ 2 generations)")
+        s"$rounds rounds (expected ≤ 2 generations)")
     for (id <- leaked; rdd <- sc.getPersistentRDDs.get(id))
       rdd.unpersist(blocking = false)
   }
