@@ -1,6 +1,7 @@
 package graft.gen
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Codec
 
@@ -82,6 +83,31 @@ object Synth {
   def encodeImage(k: Long): Array[Byte] =
     Codec.encode(planes(k), wOf(k), hOf(k), fmtOf(k))
 
+  /** Vegetation mask of a stored image's pixels: 1 where NIR (band 3)
+    * exceeds red (band 2), else 0; NaN on nodata. */
+  def vegMask(bytes: Array[Byte], w: Int, h: Int, fmt: String): Array[Double] = {
+    val c = Codec.decode(bytes, w, h, Codec.bandsStored(fmt, NumBands), fmt)
+    Array.tabulate(w * h) { i =>
+      val r = c(2)(i); val n = c(3)(i)
+      if (r.isNaN || n.isNaN) Double.NaN
+      else if (n - r > 0) 1.0 else 0.0
+    }
+  }
+
+  /** Diagonal-stripe mask of a stored image's pixels: d = NIR − red > 0
+    * with d % 5 in {1, 2}; nodata is background. */
+  def stripeMask(bytes: Array[Byte], w: Int, h: Int, fmt: String): Array[Boolean] = {
+    val c = Codec.decode(bytes, w, h, Codec.bandsStored(fmt, NumBands), fmt)
+    Array.tabulate(w * h) { i =>
+      val r = c(2)(i); val n = c(3)(i)
+      if (r.isNaN || n.isNaN) false
+      else {
+        val d = (n - r).toLong
+        d > 0 && { val m = d % 5; m == 1 || m == 2 }
+      }
+    }
+  }
+
   /** Images metadata table derived from `part` — no pixel payload.
     * Columns: k, image_id, w, h, fmt, nw, caption, x0m, y0m, x1m, y1m. */
   def images(spark: SparkSession, sfDir: String): DataFrame = {
@@ -104,6 +130,69 @@ object Synth {
     ).withColumn("x1m", col("x0m") + col("w") * ResM)
      .withColumn("y1m", col("y0m") + col("h") * ResM)
   }
+
+  /** Covering-cell resolution of the gates' spatial joins
+    * (4096 mdeg ≈ 4.1°). */
+  val JoinRes = 7
+
+  /** AR-bucket lattice for q_ar_buckets (square, 4:3 pair, 16:9 pair,
+    * 3:2 pair, 2:1 pair — the usual multimodal-training ratio set). */
+  val ArLattice = Seq((1, 1), (4, 3), (3, 4), (16, 9), (9, 16),
+    (3, 2), (2, 3), (2, 1), (1, 2))
+
+  /** Pixel-exact query class: small (≤64×64) images in exact codecs
+    * (the oracle's `simg`, [[OracleCte.SimgCte]]). */
+  val smallRaw: DataFrame => DataFrame =
+    _.where(col("w") <= 64 && col("h") <= 64 &&
+            (col("k") % 6 === 1 || col("k") % 6 === 2))
+
+  /** The driver's tables that gates read as they are. */
+  def documents(spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.parquet(s"$sfDir/documents.parquet")
+  def embeddings(spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.parquet(s"$sfDir/embeddings.parquet")
+  def events(spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.parquet(s"$sfDir/events.parquet")
+
+  /** Hex digit `pos` (1-based) of md5(event_id) as a long: the events'
+    * deterministic coordinate source (the oracle side is
+    * [[OracleCte.hx]] over `md5(CAST(event_id AS VARCHAR))`). */
+  def eventHex(pos: Int): Column =
+    graft.sketch.Cms.hexVal(md5(col("event_id").cast("string")), pos)
+      .cast("long")
+
+  /** The event point: 12-bit integer coordinates from hex digits 1–3
+    * (px) and 4–6 (py). */
+  def eventPx: Column = eventHex(1) * 256 + eventHex(2) * 16 + eventHex(3)
+  def eventPy: Column = eventHex(4) * 256 + eventHex(5) * 16 + eventHex(6)
+
+  /** Events of the users below `users`, with their points (px, py). */
+  def eventPoints(spark: SparkSession, sfDir: String, users: Int): DataFrame =
+    events(spark, sfDir).where(col("user_id") < users)
+      .withColumn("px", eventPx).withColumn("py", eventPy)
+
+  /** Per-user event tracks: (user_id, ts, event_id, idx, px, py) with
+    * idx the 0-based rank in (ts, event_id) order, per user or, with
+    * `perDay`, per (user, UTC day) with the `day` column kept. */
+  def eventTracks(spark: SparkSession, sfDir: String, users: Int,
+                  perDay: Boolean = false): DataFrame = {
+    val ev = events(spark, sfDir).where(col("user_id") < users)
+      .select(col("user_id"), col("ts"), col("event_id"))
+    val (base, keys) =
+      if (!perDay) (ev, Seq(col("user_id")))
+      else (ev.withColumn("day",
+          floor(unix_timestamp(col("ts")) / 86400).cast("long")),
+        Seq(col("user_id"), col("day")))
+    val win = Window.partitionBy(keys: _*).orderBy(col("ts"), col("event_id"))
+    base.withColumn("idx", row_number().over(win).cast("long") - 1)
+      .withColumn("px", eventPx).withColumn("py", eventPy)
+  }
+
+  /** Tracks collected per user: (user_id, pts), pts the (idx, px, py)
+    * list. */
+  def trackLists(tracks: DataFrame): DataFrame =
+    tracks.groupBy("user_id")
+      .agg(collect_list(struct(col("idx"), col("px"), col("py"))).as("pts"))
 
   /** Images WITH encoded payload + phash (the full input_hint schema).
     * `keyFilter` prunes BEFORE the encode kernel runs (column-pruned,
@@ -223,6 +312,18 @@ object Synth {
       .select(col("k"), col("image_id"), col("w"), col("h"))
       .withColumn("t", explode(sequence(lit(0), lit(epochs - 1))))
       .withColumn("bytes", enc(col("k"), col("t")))
+  }
+
+  /** The small-image DEM epochs collected per image: (k, image_id, w,
+    * h, eps) with eps the (t, bytes) list of the epochs in `keep`, or of
+    * all `epochs` when `keep` is empty. */
+  def demEpochStacks(spark: SparkSession, sfDir: String, epochs: Int,
+                     keep: Seq[Int] = Nil): DataFrame = {
+    val ep = demEpochImages(spark, sfDir, epochs, smallRaw)
+    (if (keep.isEmpty) ep else ep.where(col("t").isin(keep: _*)))
+      .groupBy("k", "image_id", "w", "h")
+      .agg(collect_list(struct(col("t").cast("int").as("t"),
+        col("bytes"))).as("eps"))
   }
 
   /** Polygon layer derived from `nation`: axis-aligned AOI rectangles in

@@ -82,12 +82,14 @@ object Knn {
     var resolved: DataFrame = null
     var r = initialRing.toLong
     var exhaustive = false
+    val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     while (!exhaustive) {
       exhaustive = r >= domainRing
       val round = topk(
         imgCells.join(broadcast(ringCells(unresolved, r)), Seq("cell"))
           .withColumn("dist2", dist2),
         k).cache()
+      rounds += round
       if (exhaustive) {
         resolved = if (resolved == null) round else resolved.union(round)
       } else {
@@ -105,6 +107,10 @@ object Knn {
         if (nResolved >= nQueries) exhaustive = true else r *= 2
       }
     }
-    resolved
+    // the result has at most #queries × k rows: hold it on the driver so
+    // no round stays cached in the session once the call returns
+    val rows = resolved.collect()
+    rounds.foreach(_.unpersist())
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), resolved.schema)
   }
 }

@@ -11,7 +11,8 @@ import org.apache.spark.SparkContext
   *   - `Terrain.flowAccum` must keep every round's pairs slice: the
   *     final ancestor count and each later round's probe read all of
   *     them, so no generation is ever superseded;
-  *   - `Knn.knn` ring-doubles over `.cache()`d rounds, not checkpoints.
+  *   - `Knn.knn` ring-doubles over `.cache()`d rounds, not checkpoints,
+  *     and unpersists them all once its small result is collected.
   */
 object Rounds {
 

@@ -970,8 +970,9 @@ object TextOps {
 
   /** 64-bit SimHash over tokens: per token, the first 8 md5 bytes vote
     * ±1 per bit position; sign → bit. Deterministic and all-integer, so
-    * the DuckDB oracle re-derives it exactly (SparkEntry.SimhashCte:
-    * hex-char nibble bits × generate_series votes). */
+    * the DuckDB oracle re-derives it exactly (`SimhashCte` in
+    * [[graft.gates.TextGates]]: hex-char nibble bits × generate_series
+    * votes). */
   def simhash(docs: DataFrame): DataFrame = {
     val sim = udf((text: String) => {
       val votes = new Array[Int](64)

@@ -179,6 +179,19 @@ class SparkOpsSpec extends SparkSuite {
     assert(got == brute)
   }
 
+  test("knn leaves no cached round in the session") {
+    val im = images(2000)
+      .withColumn("cxm", col("x0m") + col("w") * 2)
+      .withColumn("cym", col("y0m") + col("h") * 2)
+      .select("image_id", "cxm", "cym")
+    // a far-off query needs ring doubling, so several rounds are cached
+    val qs = spark.createDataFrame(Seq((0L, 0L, 0L), (1L, 170000L, 85000L)))
+      .toDF("qid", "qxm", "qym")
+    spark.catalog.clearCache()
+    assert(Knn.knn(spark, im, qs, 7, 7).collect().length === 14)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("tiling reproduces the reference chunks() contract") {
     // contract (/root/reference/test/test_GeoResource.py:110-125):
     // full-width row bands, contiguous, equal heights except last
