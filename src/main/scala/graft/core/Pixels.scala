@@ -139,6 +139,28 @@ object Pixels {
 
   def stats(p: Array[Double]): Stats = statsN(p, p.length)
 
+  /** (valid count, Σ (v·scale).toLong) over a plane; NaN is nodata.
+    * Each term TRUNCATES toward zero, like the oracle's CAST. */
+  def validSum(p: Array[Double], scale: Double = 1.0): (Long, Long) = {
+    var n = 0L; var s = 0L; var i = 0
+    while (i < p.length) {
+      if (!p(i).isNaN) { n += 1; s += (p(i) * scale).toLong }
+      i += 1
+    }
+    (n, s)
+  }
+
+  /** (valid count, Σ floor(v·scale)) over a plane; NaN is nodata.
+    * Each term FLOORS, like the oracle's FLOOR. */
+  def validFloorSum(p: Array[Double], scale: Double): (Long, Long) = {
+    var n = 0L; var s = 0L; var i = 0
+    while (i < p.length) {
+      if (!p(i).isNaN) { n += 1; s += math.floor(p(i) * scale).toLong }
+      i += 1
+    }
+    (n, s)
+  }
+
   /** Length-bounded variant for reusable scratch buffers (hot decode
     * paths keep per-thread buffers sized to the max payload and bound
     * the pass by the live prefix — zero allocation per image). */

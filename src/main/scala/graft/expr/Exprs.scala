@@ -1,13 +1,11 @@
 package graft.expr
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, FloatType, IntegerType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.sql.{SparkSessionExtensions, SparkSessionExtensionsProvider}
 import graft.core.Geom
 import graft.index.CellGrid
 
@@ -15,9 +13,8 @@ import graft.index.CellGrid
   * preferred over Scala UDFs (no boxing/encoder round-trip; CellPack
   * generates straight-line Java inside whole-stage codegen).
   *
-  * Registered for SQL via [[GraftExtensions]]
-  * (SparkSessionExtensions.injectFunction) or
-  * [[GraftFunctions.register]] on an existing session:
+  * Registered for SQL by [[GraftFunctions.register]] on a live session
+  * (idempotent: it replaces any earlier registration):
   *   graft_cell_pack(lonM, latM, res)          → packed long cell id
   *   graft_cell_cover(x0,y0,x1,y1, res)        → array<long> covering
   *   graft_rect_poly(x0,y0,x1,y1, wkt)         → exact rect∩polygon
@@ -189,14 +186,4 @@ object GraftFunctions {
     spark.sessionState.functionRegistry
       .createOrReplaceTempFunction(name, b, "built-in")
   }
-}
-
-/** spark.sql.extensions entry point: registers the graft functions at
-  * session build time (`--conf spark.sql.extensions=graft.expr.GraftExtensions`). */
-class GraftExtensions extends SparkSessionExtensionsProvider {
-  override def apply(ext: SparkSessionExtensions): Unit =
-    GraftFunctions.all.foreach { case (name, b) =>
-      ext.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo("graft.expr", name), b))
-    }
 }

@@ -2133,14 +2133,8 @@ object ImageGates {
         import graft.core.{Codec, Pixels}
         val p = Codec.decode(bytes, w, h,
           Codec.bandsStored(fmt, Synth.NumBands), fmt)(0)
-        val out = Pixels.applyChain(p,
-          Seq(math.sqrt, (v: Double) => v + 5.0, (v: Double) => v * 2.0))
-        var n = 0L; var fs = 0L; var i = 0
-        while (i < out.length) {
-          if (!out(i).isNaN) { n += 1; fs += math.floor(out(i) * 1e6).toLong }
-          i += 1
-        }
-        (n, fs)
+        Pixels.validFloorSum(Pixels.applyChain(p,
+          Seq(math.sqrt, (v: Double) => v + 5.0, (v: Double) => v * 2.0)), 1e6)
       })
       Synth.imagesWithBytes(s, dir, Synth.smallRaw)
         .withColumn("c", ch(col("bytes"), col("w").cast("int"),

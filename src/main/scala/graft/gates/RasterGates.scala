@@ -2,6 +2,7 @@ package graft.gates
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Pixels
 import graft.gen.Synth
 import graft.gen.OracleCte.{ClassifyCtes, DemEpochPairCte, SimgCte,
   StripeMaskSelect, TrendValue, bandParams => B, images => I,
@@ -41,15 +42,6 @@ object RasterGates {
        |    AND c.cum >= t.target AND c.cum - c.cnt < t.target)""".stripMargin
   }
 
-  /** (valid count, Σ value) of a decoded plane; NaN is nodata. */
-  private def validSum(p: Array[Double]): (Long, Long) = {
-    var n = 0L; var sum = 0L; var i = 0
-    while (i < p.length) {
-      if (!p(i).isNaN) { n += 1; sum += p(i).toLong }
-      i += 1
-    }
-    (n, sum)
-  }
 
   /** The dense multi-hit mosaic fixture: the small images re-anchored
     * onto one window (x0m = (k % 4)·60 − 100, y0m = (3k % 4)·60 − 100)
@@ -765,14 +757,8 @@ object RasterGates {
       val rs = udf((bytes: Array[Byte], w: Int, h: Int, fmt: String) => {
         val p = graft.core.Codec.decode(bytes, w, h,
           graft.core.Codec.bandsStored(fmt, Synth.NumBands), fmt)(0)
-        val out = Warp.resample(p, w, h, 0, h, 1.0, 1.0,
-          Warp.Grid(0, 0, w, h, 2 * w, 2 * h, 0.5, 0.5), interp = 1)
-        var n = 0L; var s16 = 0L; var i = 0
-        while (i < out.length) {
-          if (!out(i).isNaN) { n += 1; s16 += (out(i) * 16.0).toLong }
-          i += 1
-        }
-        (n, s16)
+        Pixels.validSum(Warp.resample(p, w, h, 0, h, 1.0, 1.0,
+          Warp.Grid(0, 0, w, h, 2 * w, 2 * h, 0.5, 0.5), interp = 1), 16.0)
       })
       Synth.imagesWithBytes(s, dir, Synth.smallRaw)
         .withColumn("r", rs(col("bytes"), col("w").cast("int"),
@@ -827,7 +813,7 @@ object RasterGates {
           graft.core.Codec.bandsStored(fmt, Synth.NumBands), fmt)(0)
         val out = Warp.resample(p, w, h, 0, h, 1.0, 1.0,
           Warp.Grid(0, 0, w, h, 2 * w, 2 * h, 0.5, 0.5), interp = 0)
-        validSum(out)
+        Pixels.validSum(out)
       })
       Synth.imagesWithBytes(s, dir, Synth.smallRaw)
         .withColumn("r", rs(col("bytes"), col("w").cast("int"),
@@ -858,7 +844,7 @@ object RasterGates {
         val dw = (w + 2) / 3; val dh = (h + 2) / 3
         val out = Warp.resampleWithOverviews(p, w, h, 0, h, 1.0, 1.0,
           Warp.Grid(0, 0, w, h, dw, dh, 3.0, 3.0), interp = 0)
-        validSum(out)
+        Pixels.validSum(out)
       })
       Synth.imagesWithBytes(s, dir, Synth.smallRaw)
         .withColumn("r", rs(col("bytes"), col("w").cast("int"),
@@ -1053,7 +1039,7 @@ object RasterGates {
       val agg = udf((bytes: Array[Byte], w: Int, h: Int, fmt: String) => {
         import graft.core.Codec
         val p = Codec.decode(bytes, w, h, Codec.bandsStored(fmt, 12), fmt)(7)
-        validSum(p)
+        Pixels.validSum(p)
       })
       df.withColumn("a", agg(col("bytes"), col("w").cast("int"),
           col("h").cast("int"), col("fmt")))
@@ -1101,7 +1087,7 @@ object RasterGates {
       val agg = udf((bytes: Array[Byte], w: Int, h: Int, fmt: String) => {
         import graft.core.Codec
         val p = Codec.decode(bytes, w, h, 3, fmt)(2)
-        validSum(p)
+        Pixels.validSum(p)
       })
       ex.withColumn("a", agg(col("bytes"), col("w").cast("int"),
           col("h").cast("int"), col("fmt")))
@@ -1248,7 +1234,7 @@ object RasterGates {
       val agg = udf((bytes: Array[Byte], w: Int, h: Int, fmt: String) => {
         import graft.core.Codec
         val p = Codec.decode(bytes, w, h, Codec.bandsStored(fmt, 7), fmt)(6)
-        validSum(p)
+        Pixels.validSum(p)
       })
       df.withColumn("a", agg(col("bytes"), col("w").cast("int"),
           col("h").cast("int"), col("fmt")))

@@ -34,13 +34,7 @@ object Algorithms {
     val c = Codec.requireBands(
       Codec.decode(bytes, w, h, Codec.bandsStored(fmt, nb), fmt),
       3, "whiteness", fmt)
-    val p = whitenessPlane(c(2), c(1), c(0)) // red, green, blue
-    var n = 0L; var fs = 0L; var i = 0
-    while (i < p.length) {
-      if (!p(i).isNaN) { n += 1; fs += math.floor(p(i) * 1e6).toLong }
-      i += 1
-    }
-    (n, fs)
+    Pixels.validFloorSum(whitenessPlane(c(2), c(1), c(0)), 1e6) // red, green, blue
   })
 
   // ---- linear_transform (GeoAlgorithms.cpp:642-670): out_j = Σ c_ij·band_i ----
@@ -351,13 +345,7 @@ object Algorithms {
     * range [0,1000] (GeoRaster.h:355-363 min/max variant). */
   val autoscaleAgg = udf((bytes: Array[Byte], w: Int, h: Int, fmt: String, nb: Int) => {
     val p = Codec.decode(bytes, w, h, Codec.bandsStored(fmt, nb), fmt)(0)
-    val out = Pixels.autoscale(p, 0.0, 1000.0)
-    var n = 0L; var fs = 0L; var i = 0
-    while (i < out.length) {
-      if (!out(i).isNaN) { n += 1; fs += math.floor(out(i) * 1000).toLong }
-      i += 1
-    }
-    (n, fs)
+    Pixels.validFloorSum(Pixels.autoscale(p, 0.0, 1000.0), 1000)
   })
 
   /** Histogram EQUALIZATION over band `bd` — the nonlinear contrast
@@ -1058,17 +1046,8 @@ object Algorithms {
     val pan = Codec.decode(panBytes, pw, ph, 1, "raw-i16le")(0)
     val out = pansharpBrovey(cube, w, h, pan, pw, ph,
       Array(0.25, 0.25, 0.25, 0.25))
-    var n = 0L; var fs = 0L
-    var b = 0
-    while (b < 3) {
-      var i = 0
-      while (i < out(b).length) {
-        if (!out(b)(i).isNaN) { n += 1; fs += math.floor(out(b)(i) * 1e3).toLong }
-        i += 1
-      }
-      b += 1
-    }
-    (n, fs)
+    out.take(3).map(Pixels.validFloorSum(_, 1e3))
+      .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
   })
 
   // ---- read_random_pixels distributed + farthest-point seeding ----

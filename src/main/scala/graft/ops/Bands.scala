@@ -215,15 +215,9 @@ object Bands {
   val gainOffsetStatsAgg = udf((bytes: Array[Byte], w: Int, h: Int,
                                 fmt: String, nb: Int, gain: Double,
                                 offset: Double) => {
-    val p = Pixels.applyGainOffset(
+    Pixels.validFloorSum(Pixels.applyGainOffset(
       Codec.decode(bytes, w, h, Codec.bandsStored(fmt, nb), fmt)(0),
-      gain, offset)
-    var n = 0L; var fs = 0L; var i = 0
-    while (i < p.length) {
-      if (!p(i).isNaN) { n += 1; fs += math.floor(p(i) * 1e3).toLong }
-      i += 1
-    }
-    (n, fs)
+      gain, offset), 1e3)
   })
 
   /** set_color → color interpretation tag (GeoRaster.h:120-133):
@@ -284,13 +278,7 @@ object Bands {
       Codec.decode(bytes, w, h, Codec.bandsStored(fmt, nb), fmt),
       math.max(maskBand, target) + 1, "apply_mask", fmt)
     val mask = Pixels.applyChain(cube(maskBand), Seq(Pixels.gt(thresh)))
-    val masked = Pixels.applyMask(cube(target), mask)
-    var n = 0L; var s = 0L; var i = 0
-    while (i < masked.length) {
-      if (!masked(i).isNaN) { n += 1; s += masked(i).toLong }
-      i += 1
-    }
-    (n, s)
+    Pixels.validSum(Pixels.applyMask(cube(target), mask))
   })
 
   /** Full NEAREST overview pyramid of band 0 at the reference's levels
@@ -350,13 +338,7 @@ object Bands {
   val resizeAgg = udf((bytes: Array[Byte], w: Int, h: Int, fmt: String,
                        nb: Int, rw: Int, rh: Int) => {
     val p = Codec.decode(bytes, w, h, Codec.bandsStored(fmt, nb), fmt)(0)
-    val t = resizeNearest(p, w, h, rw, rh)
-    var n = 0L; var s = 0L; var i = 0
-    while (i < t.length) {
-      if (!t(i).isNaN) { n += 1; s += t(i).toLong }
-      i += 1
-    }
-    (n, s)
+    Pixels.validSum(resizeNearest(p, w, h, rw, rh))
   })
 
   /** Letterbox content dims: aspect-preserving fit of w×h into s×s

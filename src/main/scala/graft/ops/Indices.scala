@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.core.Codec
+import graft.core.{Codec, Pixels}
 import graft.gen.Synth
 
 /** The reference's 15 spectral indices
@@ -93,11 +93,7 @@ object Indices {
     val agg = udf((bytes: Array[Byte], w: Int, h: Int, fmt: String) => {
       val cube = Codec.decode(bytes, w, h, Codec.bandsStored(fmt, nb), fmt)
       planes(cube, products).zip(products).map { case (p, prod) =>
-        var n = 0L; var fs = 0L; var i = 0
-        while (i < p.length) {
-          if (!p(i).isNaN) { n += 1; fs += math.floor(p(i) * 1e6).toLong }
-          i += 1
-        }
+        val (n, fs) = Pixels.validFloorSum(p, 1e6)
         (prod, n, fs)
       }.toSeq
     })

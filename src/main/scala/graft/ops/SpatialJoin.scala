@@ -5,21 +5,39 @@ import org.apache.spark.sql.functions._
 import graft.core.Geom
 import graft.index.CellGrid
 
-/** The engine's spatial join: covering-cell equi-join prefilter + exact
-  * geometric refinement — the distributed generalization of the
-  * reference's two-phase pattern (bbox spatial filter → exact Overlaps,
-  * /root/reference/GIP/gip/GeoVector.h:153-179).
+/** The engine's spatial joins. Two banded equi-joins are written once
+  * here and every spatial operator builds on them.
   *
-  * Scale design:
-  *   - covering cells are generated with `explode(sequence(...))` over
-  *     pure shift arithmetic (codegen, no UDF);
-  *   - small polygon layers broadcast (zero shuffle); large layers take
-  *     a shuffled equi-join on the cell key, with optional SALTING of
-  *     hot cells plus AQE skew-split as the backstop;
-  *   - duplicate (image, polygon) pairs from multi-cell overlap are
-  *     eliminated WITHOUT a distinct shuffle: a pair is emitted only in
-  *     the cell containing the top-left corner of the intersection
-  *     rectangle (deterministic unique reporter cell).
+  * COVERING-CELL RECT JOIN ([[coverCells]] + [[overlapsOnce]]) — the
+  * distributed form of the reference's two-phase query (bbox spatial
+  * filter → exact Overlaps, GIP/gip/GeoVector.h:153-179):
+  *   - each rect layer explodes the cells of its bbox at `res` with
+  *     `explode(sequence(...))` over pure shift arithmetic (codegen, no
+  *     UDF) and packs them into ONE long key `cell` (a broadcast build
+  *     gets the allocation-free LongHashedRelation; a sort-merge join
+  *     sorts one column);
+  *   - the two layers equi-join on `cell` and refine by OPEN-interval
+  *     overlap ([[overlaps]]);
+  *   - a pair overlapping several shared cells meets once per cell, so
+  *     it is reported only in the cell holding the intersection's min
+  *     corner (the unique reporter cell): no distinct shuffle. The
+  *     probe side keeps its (cix, ciy) for that test; the build side
+  *     drops them.
+  *   - small build sides broadcast (zero shuffle); large ones take a
+  *     shuffled join on `cell`, with optional SALTING of hot cells plus
+  *     AQE skew-split as the backstop.
+  * Users: [[joinRects]], [[joinRectsBloom]], [[joinPolygons]],
+  * [[proximityEdges]] and `Warp.warpInto`; [[joinRectsSmallImages]]
+  * keys on min corners instead and shares only [[overlaps]].
+  *
+  * FIXED-RADIUS POINT JOIN ([[ringJoin]]): with cells at pitch r, a
+  * point within r of another lies in the other's cell or one of its 8
+  * neighbours. The probe side explodes that 3×3 ring ([[withRing]]),
+  * the base side keys its home cell, so every (a, b) pair within r
+  * meets exactly once — never all-pairs — and the exact d² ≤ r² refine
+  * runs on the candidates. Users: ripley, colocation, knox, dbscan and
+  * `Tracks.convoyPairs`; [[kdeHeatmap]] and [[neighbourSum]] reuse the
+  * ring alone.
   */
 object SpatialJoin {
 
@@ -30,6 +48,9 @@ object SpatialJoin {
   def cellIy(c: Column, res: Int): Column =
     shiftright(c + CellGrid.OffY, sh(res))
 
+  /** The packed long cell key of cell coordinates (ix, iy). */
+  def packCell(ix: Column, iy: Column): Column = ix * CellGrid.IxMul + iy
+
   /** Add exploded covering-cell columns (cix, ciy) for an mdeg bbox. */
   def withCoverCells(df: DataFrame, res: Int,
                      x0: String, y0: String, x1: String, y1: String): DataFrame =
@@ -37,6 +58,64 @@ object SpatialJoin {
         explode(sequence(cellIx(col(x0), res), cellIx(col(x1) - 1, res))))
       .withColumn("ciy",
         explode(sequence(cellIy(col(y0), res), cellIy(col(y1) - 1, res))))
+
+  /** The names of a layer's four mdeg bbox columns. */
+  private[ops] case class Box(x0: String, y0: String, x1: String, y1: String)
+  private[ops] val ImageBox = Box("x0m", "y0m", "x1m", "y1m")
+  private val PolyBox = Box("px0m", "py0m", "px1m", "py1m")
+
+  /** One row per covering cell of `b` at `res`: (cix, ciy) plus the
+    * packed key `cell`. */
+  private[ops] def coverCells(df: DataFrame, res: Int, b: Box): DataFrame =
+    withCoverCells(df, res, b.x0, b.y0, b.x1, b.y1)
+      .withColumn("cell", packCell(col("cix"), col("ciy")))
+
+  /** Open-interval overlap of boxes `a` and `b`. */
+  private def overlaps(a: Box, b: Box): Column =
+    col(a.x0) < col(b.x1) && col(b.x0) < col(a.x1) &&
+    col(a.y0) < col(b.y1) && col(b.y0) < col(a.y1)
+
+  /** [[overlaps]] reported once: only in the cell (cix, ciy) of the
+    * probe row that holds the intersection's min corner. */
+  private[ops] def overlapsOnce(a: Box, b: Box, res: Int): Column =
+    overlaps(a, b) &&
+    cellIx(greatest(col(a.x0), col(b.x0)), res) === col("cix") &&
+    cellIy(greatest(col(a.y0), col(b.y0)), res) === col("ciy")
+
+  /** Add the 3×3 ring of cells around (ix, iy) as (rx, ry): nine rows
+    * per input row. `rx`/`ry` may name `ix`/`iy` to replace them. */
+  private def withRing(df: DataFrame, ix: String, iy: String,
+                       rx: String, ry: String): DataFrame =
+    df.withColumn(rx, explode(sequence(col(ix) - 1, col(ix) + 1)))
+      .withColumn(ry, explode(sequence(col(iy) - 1, col(iy) + 1)))
+
+  /** Fixed-radius point join: every (a, b) with d² ≤ r² (as column
+    * `d2`), each pair once. `probe` carries its point in (xa, ya) and
+    * explodes its 3×3 ring of r-pitch cells (cx, cy); `base` carries
+    * (xb, yb) and keys its home cell. `keys` are extra equi-keys
+    * present on both sides. Self and mirror pairs are the caller's
+    * filter. */
+  private[ops] def ringJoin(probe: DataFrame, base: DataFrame, r: Long,
+                            keys: String*): DataFrame = {
+    def home(df: DataFrame, x: String, y: String) =
+      df.withColumn("cx", expr(s"$x div $r")).withColumn("cy", expr(s"$y div $r"))
+    val d2 = (col("xa") - col("xb")) * (col("xa") - col("xb")) +
+      (col("ya") - col("yb")) * (col("ya") - col("yb"))
+    withRing(home(probe, "xa", "ya"), "cx", "cy", "cx", "cy")
+      .join(home(base, "xb", "yb"), keys ++ Seq("cx", "cy"))
+      .withColumn("d2", d2).where(col("d2") <= lit(r * r))
+  }
+
+  /** Per bin of a (gi, gj, `v`) table: `nsum` = Σ v over its 3×3
+    * neighbourhood, self included (absent bins count 0). A 9-way
+    * explode of the bin keys joined back to the bins — constant fanout
+    * on the bin table, never the raw rows. Returns (gi, gj, nsum). */
+  private def neighbourSum(bins: DataFrame, v: String): DataFrame =
+    withRing(bins, "gi", "gj", "ni", "nj")
+      .select(col("gi"), col("gj"), col("ni"), col("nj"))
+      .join(bins.select(col("gi").as("ni"), col("gj").as("nj"),
+        col(v).as("vn")), Seq("ni", "nj"))
+      .groupBy("gi", "gj").agg(sum(col("vn")).as("nsum"))
 
   /** Hierarchical cell-density pyramid — the H3/S2-style drill-down
     * rollup over the engine's grid (CellGrid's parent = child >> 1
@@ -85,34 +164,19 @@ object SpatialJoin {
   def joinRects(images: DataFrame, polys: DataFrame, res: Int = 7,
                 broadcastPolys: Boolean = true, salt: Int = 0,
                 saltKey: String = "k"): DataFrame = {
-    val imgCells = withCoverCells(images, res, "x0m", "y0m", "x1m", "y1m")
-    val polCells0 = withCoverCells(polys, res, "px0m", "py0m", "px1m", "py1m")
-
-    val overlap =
-      col("x0m") < col("px1m") && col("px0m") < col("x1m") &&
-      col("y0m") < col("py1m") && col("py0m") < col("y1m")
-    // unique reporter cell = cell of the intersection's min corner
-    val dedup =
-      cellIx(greatest(col("x0m"), col("px0m")), res) === col("cix") &&
-      cellIy(greatest(col("y0m"), col("py0m")), res) === col("ciy")
-
-    // single packed long key on every path (broadcast builds the
-    // allocation-free LongHashedRelation; SMJ sorts one column)
-    val packed = col("cix") * CellGrid.IxMul + col("ciy")
-    if (salt <= 1) {
-      val polCells = if (broadcastPolys)
-        broadcast(polCells0.withColumn("cell", packed).drop("cix", "ciy"))
-      else polCells0.withColumn("cell", packed).drop("cix", "ciy")
-      imgCells.withColumn("cell", packed)
-        .join(polCells, Seq("cell")).where(overlap && dedup)
-    } else {
+    val imgCells = coverCells(images, res, ImageBox)
+    val polCells = coverCells(polys, res, PolyBox).drop("cix", "ciy")
+    val once = overlapsOnce(ImageBox, PolyBox, res)
+    if (salt <= 1)
+      imgCells.join(if (broadcastPolys) broadcast(polCells) else polCells,
+        Seq("cell")).where(once)
+    else
       // salt the (usually skew-prone) image side; replicate polygons
-      val imgS = imgCells.withColumn("cell", packed)
+      imgCells
         .withColumn("salt", pmod(hash(col(saltKey)).cast("long"), lit(salt.toLong)))
-      val polS = polCells0.withColumn("cell", packed).drop("cix", "ciy")
-        .withColumn("salt", explode(sequence(lit(0L), lit(salt.toLong - 1))))
-      imgS.join(polS, Seq("cell", "salt")).where(overlap && dedup)
-    }
+        .join(polCells.withColumn("salt",
+          explode(sequence(lit(0L), lit(salt.toLong - 1)))), Seq("cell", "salt"))
+        .where(once)
   }
 
   /** Z-order key column from two cell-coordinate columns — the
@@ -293,23 +357,14 @@ object SpatialJoin {
   def joinRectsBloom(images: DataFrame, polys: DataFrame, res: Int = 7,
                      expectedCells: Long = 1L << 20,
                      fpp: Double = 0.01): DataFrame = {
-    val imgCells = withCoverCells(images, res, "x0m", "y0m", "x1m", "y1m")
-    val polCells = withCoverCells(polys, res, "px0m", "py0m", "px1m", "py1m")
-    val packed = col("cix") * CellGrid.IxMul + col("ciy")
-    val overlap =
-      col("x0m") < col("px1m") && col("px0m") < col("x1m") &&
-      col("y0m") < col("py1m") && col("py0m") < col("y1m")
-    val dedup =
-      cellIx(greatest(col("x0m"), col("px0m")), res) === col("cix") &&
-      cellIy(greatest(col("y0m"), col("py0m")), res) === col("ciy")
-    val polKeyed = polCells.withColumn("cell", packed).drop("cix", "ciy")
+    val polKeyed = coverCells(polys, res, PolyBox).drop("cix", "ciy")
     val bloom = polKeyed.stat.bloomFilter("cell", expectedCells, fpp)
     val bc = images.sparkSession.sparkContext.broadcast(bloom)
     val might = udf((c: Long) => bc.value.mightContainLong(c))
-    imgCells.withColumn("cell", packed)
+    coverCells(images, res, ImageBox)
       .filter(might(col("cell")))
       .join(polKeyed, Seq("cell"))
-      .where(overlap && dedup)
+      .where(overlapsOnce(ImageBox, PolyBox, res))
   }
 
   /** Small-image fast path: one row per image through the join, keyed
@@ -339,12 +394,9 @@ object SpatialJoin {
     // would fall back to the generic UnsafeHashedRelation and allocate
     // per probe row)
     val imgCells = images.withColumn("cell",
-      cellIx(col("x0m"), kr) * CellGrid.IxMul + cellIy(col("y0m"), kr))
-    val overlap =
-      col("x0m") < col("px1m") && col("px0m") < col("x1m") &&
-      col("y0m") < col("py1m") && col("py0m") < col("y1m")
+      packCell(cellIx(col("x0m"), kr), cellIy(col("y0m"), kr)))
     imgCells.join(broadcast(polyKeyCells(polys, kr)), Seq("cell"))
-      .where(overlap).drop("cell")
+      .where(overlaps(ImageBox, PolyBox)).drop("cell")
   }
 
   /** Finest resolution `≥ res` whose cell edge is at least `maxExtentM`. */
@@ -360,7 +412,7 @@ object SpatialJoin {
         cellIx(col("px0m"), kr) - 1, cellIx(col("px1m") - 1, kr))))
       .withColumn("ciy", explode(sequence(
         cellIy(col("py0m"), kr) - 1, cellIy(col("py1m") - 1, kr))))
-      .withColumn("cell", col("cix") * CellGrid.IxMul + col("ciy"))
+      .withColumn("cell", packCell(col("cix"), col("ciy")))
       .drop("cix", "ciy")
 
   /** Anti-join: images matching NO polygon (reference analog: features
@@ -380,18 +432,13 @@ object SpatialJoin {
     graft.expr.GraftFunctions.register(images.sparkSession)
     val refine = (a: Column, b: Column, c: Column, d: Column, w: Column) =>
       call_function("graft_rect_poly", a, b, c, d, w)
-    val imgCells = withCoverCells(images, res, "x0m", "y0m", "x1m", "y1m")
-    val polCells = broadcast(
-      withCoverCells(polys, res, "px0m", "py0m", "px1m", "py1m"))
-    val bboxOverlap =
-      col("x0m") < col("px1m") && col("px0m") < col("x1m") &&
-      col("y0m") < col("py1m") && col("py0m") < col("y1m")
-    val dedup =
-      cellIx(greatest(col("x0m"), col("px0m")), res) === col("cix") &&
-      cellIy(greatest(col("y0m"), col("py0m")), res) === col("ciy")
-    imgCells.join(polCells, Seq("cix", "ciy"))
-      .where(bboxOverlap && dedup)
+    val j = coverCells(images, res, ImageBox)
+      .join(broadcast(coverCells(polys, res, PolyBox).drop("cix", "ciy")), Seq("cell"))
+      .where(overlapsOnce(ImageBox, PolyBox, res))
       .where(refine(col("x0m"), col("y0m"), col("x1m"), col("y1m"), col("geom_wkt")))
+    // public output schema: (cix, ciy, images…, polys…)
+    j.select(("cix" +: "ciy" +: j.columns.filterNot(Set("cell", "cix", "ciy")))
+      .map(col): _*)
   }
 
   /** Per-hit intersection GEOMETRY — the reference's `intersections`
@@ -493,19 +540,11 @@ object SpatialJoin {
     val base = images.select(col("k"), (col("x0m") - pad).as("bx0"),
       (col("y0m") - pad).as("by0"), (col("x1m") + pad).as("bx1"),
       (col("y1m") + pad).as("by1"))
-    val packed = col("cix") * CellGrid.IxMul + col("ciy")
-    val a = withCoverCells(base.toDF("ka", "ax0", "ay0", "ax1", "ay1"),
-        res, "ax0", "ay0", "ax1", "ay1")
-      .withColumn("cell", packed)
-    val b = withCoverCells(base.toDF("kb", "bx0", "by0", "bx1", "by1"),
-        res, "bx0", "by0", "bx1", "by1")
-      .withColumn("cell", packed).drop("cix", "ciy")
-    a.join(b, Seq("cell"))
-      .where(col("ka") < col("kb") &&
-        col("ax0") < col("bx1") && col("bx0") < col("ax1") &&
-        col("ay0") < col("by1") && col("by0") < col("ay1") &&
-        cellIx(greatest(col("ax0"), col("bx0")), res) === col("cix") &&
-        cellIy(greatest(col("ay0"), col("by0")), res) === col("ciy"))
+    val (aBox, bBox) = (Box("ax0", "ay0", "ax1", "ay1"), Box("bx0", "by0", "bx1", "by1"))
+    coverCells(base.toDF("ka", "ax0", "ay0", "ax1", "ay1"), res, aBox)
+      .join(coverCells(base.toDF("kb", "bx0", "by0", "bx1", "by1"), res, bBox)
+        .drop("cix", "ciy"), Seq("cell"))
+      .where(col("ka") < col("kb") && overlapsOnce(aBox, bBox, res))
   }
 
   /** Triangle census of the proximity graph via degree-ordered
@@ -584,9 +623,8 @@ object SpatialJoin {
     * pieces. Doubled-coordinate space avoids the centroid divide.
     *
     * Scale posture: one hash shuffle to the bin key builds the bin
-    * table; the neighborhood sum is a 9-way explode of bin keys
-    * joined back to bins — constant fanout on the SMALL bin table,
-    * never touching the raw rows again. Returns one row per
+    * table; the neighborhood sum is [[neighbourSum]] on that SMALL
+    * table, never touching the raw rows again. Returns one row per
     * non-empty bin: (gi, gj, x, nsum). */
   def hotspotBins(images: DataFrame, eps: Long): DataFrame = {
     val pts = images.select(
@@ -595,15 +633,7 @@ object SpatialJoin {
     val bins = pts
       .select(expr(s"qx div $eps").as("gi"), expr(s"qy div $eps").as("gj"))
       .groupBy("gi", "gj").agg(count(lit(1)).as("x"))
-    val probe = bins
-      .withColumn("ni", explode(sequence(col("gi") - 1, col("gi") + 1)))
-      .withColumn("nj", explode(sequence(col("gj") - 1, col("gj") + 1)))
-      .select(col("gi"), col("gj"), col("ni"), col("nj"))
-    val nsum = probe
-      .join(bins.select(col("gi").as("ni"), col("gj").as("nj"),
-        col("x").as("xn")), Seq("ni", "nj"))
-      .groupBy("gi", "gj").agg(sum(col("xn")).as("nsum"))
-    bins.join(nsum, Seq("gi", "gj"))
+    bins.join(neighbourSum(bins, "x"), Seq("gi", "gj"))
       .select(col("gi"), col("gj"), col("x"), col("nsum"))
   }
 
@@ -699,19 +729,12 @@ object SpatialJoin {
     * Input: (id, px, py). Returns (r, n_pairs) per radius. */
   def ripleyCounts(pts: DataFrame, radii: Seq[Long]): DataFrame = {
     val rmax = radii.max
-    val base = pts.select(col("id"), col("px"), col("py"),
-      expr(s"px div $rmax").as("cx"), expr(s"py div $rmax").as("cy"))
-    val probe = base
-      .withColumn("ncx", explode(sequence(col("cx") - 1, col("cx") + 1)))
-      .withColumn("ncy", explode(sequence(col("cy") - 1, col("cy") + 1)))
-      .select(col("id").as("ia"), col("px").as("xa"), col("py").as("ya"),
-        col("ncx").as("cx"), col("ncy").as("cy"))
-    val d2 = (col("xa") - col("px")) * (col("xa") - col("px")) +
-      (col("ya") - col("py")) * (col("ya") - col("py"))
-    val pairs = probe.join(base.select(col("id").as("ib"), col("px"),
-        col("py"), col("cx"), col("cy")), Seq("cx", "cy"))
-      .where(col("ia") < col("ib") && d2 <= lit(rmax * rmax))
-      .select(d2.as("d2"))
+    val pairs = ringJoin(
+        pts.select(col("id").as("ia"), col("px").as("xa"), col("py").as("ya")),
+        pts.select(col("id").as("ib"), col("px").as("xb"), col("py").as("yb")),
+        rmax)
+      .where(col("ia") < col("ib"))
+      .select("d2")
     val sp = pts.sparkSession
     import sp.implicits._
     pairs.crossJoin(broadcast(radii.toDF("r")))
@@ -781,14 +804,7 @@ object SpatialJoin {
     val tbMax = binned.agg(max("tb").as("tbm"))
     val last = binned.join(broadcast(tbMax), col("tb") === col("tbm"))
       .select("gi", "gj", "c")
-    val probe = last
-      .withColumn("ni", explode(sequence(col("gi") - 1, col("gi") + 1)))
-      .withColumn("nj", explode(sequence(col("gj") - 1, col("gj") + 1)))
-      .select(col("gi"), col("gj"), col("ni"), col("nj"))
-    val nsum = probe
-      .join(last.select(col("gi").as("ni"), col("gj").as("nj"),
-        col("c").as("cn")), Seq("ni", "nj"))
-      .groupBy("gi", "gj").agg(sum("cn").as("nsum"))
+    val nsum = neighbourSum(last, "c")
     val glob = last.agg(sum("c").as("tot"), count(lit(1)).as("ncl"))
     val hotCells = nsum.crossJoin(broadcast(glob))
       .select(col("gi"), col("gj"),
@@ -864,21 +880,11 @@ object SpatialJoin {
   def colocationCounts(ptsA: DataFrame, ptsB: DataFrame,
                        radii: Seq[Long]): DataFrame = {
     val rmax = radii.max
-    val a = ptsA.select(col("id").as("ia"), col("px").as("xa"),
-        col("py").as("ya"), expr(s"px div $rmax").as("cx"),
-        expr(s"py div $rmax").as("cy"))
-      .withColumn("ncx", explode(sequence(col("cx") - 1, col("cx") + 1)))
-      .withColumn("ncy", explode(sequence(col("cy") - 1, col("cy") + 1)))
-      .select(col("ia"), col("xa"), col("ya"),
-        col("ncx").as("cx"), col("ncy").as("cy"))
-    val b = ptsB.select(col("id").as("ib"), col("px").as("xb"),
-      col("py").as("yb"), expr(s"px div $rmax").as("cx"),
-      expr(s"py div $rmax").as("cy"))
-    val d2 = (col("xa") - col("xb")) * (col("xa") - col("xb")) +
-      (col("ya") - col("yb")) * (col("ya") - col("yb"))
-    val cand = a.join(b, Seq("cx", "cy"))
-      .where(d2 <= lit(rmax * rmax))
-      .select(col("ia"), col("ib"), d2.as("d2"))
+    val cand = ringJoin(
+        ptsA.select(col("id").as("ia"), col("px").as("xa"), col("py").as("ya")),
+        ptsB.select(col("id").as("ib"), col("px").as("xb"), col("py").as("yb")),
+        rmax)
+      .select("ia", "ib", "d2")
     val sp = ptsA.sparkSession
     import sp.implicits._
     cand.crossJoin(broadcast(radii.toDF("r")))
@@ -924,10 +930,9 @@ object SpatialJoin {
     * Input (px, py). Returns (gi, gj, n_pts, density). */
   def kdeHeatmap(pts: DataFrame, r: Long): DataFrame = {
     val half = r / 2
-    val p = pts.select(col("px"), col("py"),
-        expr(s"px div $r").as("cx"), expr(s"py div $r").as("cy"))
-      .withColumn("gi", explode(sequence(col("cx") - 1, col("cx") + 1)))
-      .withColumn("gj", explode(sequence(col("cy") - 1, col("cy") + 1)))
+    val p = withRing(pts.select(col("px"), col("py"),
+        expr(s"px div $r").as("cx"), expr(s"py div $r").as("cy")),
+      "cx", "cy", "gi", "gj")
     val dxc = col("px") - (col("gi") * r + half)
     val dyc = col("py") - (col("gj") * r + half)
     val d2 = dxc * dxc + dyc * dyc
@@ -1008,20 +1013,14 @@ object SpatialJoin {
     * (id, px, py, t). Returns one row
     * (n_pts, n_space, n_time, n_st). */
   def knoxCounts(pts: DataFrame, s: Long, tau: Long): DataFrame = {
-    val base = pts.select(col("id"), col("px"), col("py"), col("t"),
-      expr(s"px div $s").as("cx"), expr(s"py div $s").as("cy"),
-      expr(s"t div $tau").as("tb"))
-    val probe = base
-      .withColumn("ncx", explode(sequence(col("cx") - 1, col("cx") + 1)))
-      .withColumn("ncy", explode(sequence(col("cy") - 1, col("cy") + 1)))
-      .select(col("id").as("ia"), col("px").as("xa"), col("py").as("ya"),
-        col("t").as("ta"), col("ncx").as("cx"), col("ncy").as("cy"))
-    val spacePairs = probe.join(base.select(col("id").as("ib"),
-        col("px").as("xb"), col("py").as("yb"), col("t").as("tbs"),
-        col("cx"), col("cy")), Seq("cx", "cy"))
-      .where(col("ia") < col("ib") &&
-        (col("xa") - col("xb")) * (col("xa") - col("xb")) +
-        (col("ya") - col("yb")) * (col("ya") - col("yb")) <= lit(s * s))
+    val base = pts.select(col("id"), col("t"), expr(s"t div $tau").as("tb"))
+    val spacePairs = ringJoin(
+        pts.select(col("id").as("ia"), col("px").as("xa"), col("py").as("ya"),
+          col("t").as("ta")),
+        pts.select(col("id").as("ib"), col("px").as("xb"), col("py").as("yb"),
+          col("t").as("tbs")),
+        s)
+      .where(col("ia") < col("ib"))
       .select(col("ia"), col("ib"), col("ta"), col("tbs"))
     val timeProbe = base
       .withColumn("ntb", explode(sequence(col("tb") - 1, col("tb") + 1)))
@@ -1170,21 +1169,11 @@ object SpatialJoin {
     val pts = images.select(col("k"),
       (col("x0m") + col("x1m") + lit(2L * CellGrid.OffX)).as("qx"),
       (col("y0m") + col("y1m") + lit(2L * CellGrid.OffY)).as("qy"))
-    val home = pts.select(col("k").as("kb"), col("qx").as("bx"),
-        col("qy").as("by"))
-      .withColumn("gi", expr(s"bx div $eps"))
-      .withColumn("gj", expr(s"by div $eps"))
-    val probe = pts.select(col("k").as("ka"), col("qx").as("ax"),
-        col("qy").as("ay"))
-      .withColumn("gi", explode(sequence(
-        expr(s"ax div $eps") - 1, expr(s"ax div $eps") + 1)))
-      .withColumn("gj", explode(sequence(
-        expr(s"ay div $eps") - 1, expr(s"ay div $eps") + 1)))
-    val pairs = probe.join(home, Seq("gi", "gj"))
-      .where(col("ka") =!= col("kb") &&
-        (col("ax") - col("bx")) * (col("ax") - col("bx")) +
-        (col("ay") - col("by")) * (col("ay") - col("by")) <=
-          lit(eps * eps))
+    val pairs = ringJoin(
+        pts.select(col("k").as("ka"), col("qx").as("xa"), col("qy").as("ya")),
+        pts.select(col("k").as("kb"), col("qx").as("xb"), col("qy").as("yb")),
+        eps)
+      .where(col("ka") =!= col("kb"))
       .select("ka", "kb")
     val nbrs = pairs.groupBy("ka").agg(count(lit(1)).as("nn"))
     val cores = pts.select(col("k"))

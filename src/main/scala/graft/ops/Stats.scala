@@ -140,13 +140,8 @@ object Stats {
   val convolveBoxAgg = udf(
     (bytes: Array[Byte], w: Int, h: Int, fmt: String, nb: Int) => {
       val p = Codec.decode(bytes, w, h, Codec.bandsStored(fmt, nb), fmt)(0)
-      val out = Pixels.convolveNodata(p, w, h, Array.fill(9)(1.0), 3, 3)
-      var n = 0L; var fs = 0L; var i = 0
-      while (i < out.length) {
-        if (!out(i).isNaN) { n += 1; fs += math.floor(out(i) * 1e6).toLong }
-        i += 1
-      }
-      (n, fs)
+      Pixels.validFloorSum(
+        Pixels.convolveNodata(p, w, h, Array.fill(9)(1.0), 3, 3), 1e6)
     })
 
   /** ZONAL statistics: per-polygon aggregates of the pixels whose

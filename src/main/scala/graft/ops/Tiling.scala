@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.core.Codec
+import graft.core.{Codec, Pixels}
 
 /** Deterministic image→tile assignment map — the Spark re-creation of
   * the reference's chunk iterator (/root/reference/GIP/GeoResource.cpp:
@@ -76,12 +76,7 @@ object Tiling {
           y += 1
         }
       }
-      var n = 0L; var vs = 0L; var i = 0
-      while (i < out.length) {
-        if (!out(i).isNaN) { n += 1; vs += out(i).toLong }
-        i += 1
-      }
-      (n, vs)
+      Pixels.validSum(out)
     })
     slices
       .groupBy(col("image_id"), col("w"), col("h"))

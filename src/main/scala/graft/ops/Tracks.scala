@@ -266,20 +266,12 @@ object Tracks {
   def convoyPairs(pts: org.apache.spark.sql.DataFrame, s: Long,
                   tbSize: Long, minRun: Int):
       org.apache.spark.sql.DataFrame = {
-    val base = pts.select(col("u"), col("px"), col("py"),
-      expr(s"t div $tbSize").as("tb"),
-      expr(s"px div $s").as("cx"), expr(s"py div $s").as("cy"))
-    val probe = base
-      .withColumn("ncx", explode(sequence(col("cx") - 1, col("cx") + 1)))
-      .withColumn("ncy", explode(sequence(col("cy") - 1, col("cy") + 1)))
-      .select(col("u").as("ua"), col("px").as("xa"), col("py").as("ya"),
-        col("tb"), col("ncx").as("cx"), col("ncy").as("cy"))
-    val d2 = (col("xa") - col("xb")) * (col("xa") - col("xb")) +
-      (col("ya") - col("yb")) * (col("ya") - col("yb"))
-    val meet = probe.join(base.select(col("u").as("ub"),
-        col("px").as("xb"), col("py").as("yb"),
-        col("tb"), col("cx"), col("cy")), Seq("tb", "cx", "cy"))
-      .where(col("ua") < col("ub") && d2 <= lit(s * s))
+    val tb = expr(s"t div $tbSize").as("tb")
+    val meet = SpatialJoin.ringJoin(
+        pts.select(col("u").as("ua"), col("px").as("xa"), col("py").as("ya"), tb),
+        pts.select(col("u").as("ub"), col("px").as("xb"), col("py").as("yb"), tb),
+        s, "tb")
+      .where(col("ua") < col("ub"))
       .select("ua", "ub", "tb").distinct()
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("ua", "ub").orderBy("tb")

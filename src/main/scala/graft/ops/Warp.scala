@@ -280,26 +280,14 @@ object Warp {
       .withColumn("tgy1", col("gy1") - col("ty") * (tpx * resM))
       .withColumn("tgx1", col("tgx0") + col("tw") * resM)
       .withColumn("tgy0", col("tgy1") - col("th") * resM)
-    // covering-cell equi-join (SpatialJoin's pattern): single packed
-    // long key, min-corner reporter-cell dedup, exact range refine
-    val packed = col("cix") * graft.index.CellGrid.IxMul + col("ciy")
-    val tileCells = {
-      val t = SpatialJoin.withCoverCells(tiles, cellRes,
-        "tgx0", "tgy0", "tgx1", "tgy1")
-        .withColumn("cell", packed).drop("cix", "ciy")
-      if (broadcastTiles) broadcast(t) else t
-    }
-    val imgCells = SpatialJoin.withCoverCells(images, cellRes,
-      "x0m", "y0m", "x1m", "y1m")
-      .withColumn("cell", packed)
-    val overlapP =
-      col("x0m") < col("tgx1") && col("tgx0") < col("x1m") &&
-      col("y0m") < col("tgy1") && col("tgy0") < col("y1m")
-    val dedup =
-      SpatialJoin.cellIx(greatest(col("x0m"), col("tgx0")), cellRes) === col("cix") &&
-      SpatialJoin.cellIy(greatest(col("y0m"), col("tgy0")), cellRes) === col("ciy")
-    val pairs = imgCells.join(tileCells, Seq("cell"))
-      .where(overlapP && dedup && pairPredicate)
+    // the covering-cell rect join (SpatialJoin's scaladoc) of images
+    // against output tiles
+    import SpatialJoin.{Box, ImageBox, coverCells, overlapsOnce}
+    val tileBox = Box("tgx0", "tgy0", "tgx1", "tgy1")
+    val tileCells = coverCells(tiles, cellRes, tileBox).drop("cix", "ciy")
+    val pairs = coverCells(images, cellRes, ImageBox)
+      .join(if (broadcastTiles) broadcast(tileCells) else tileCells, Seq("cell"))
+      .where(overlapsOnce(ImageBox, tileBox, cellRes) && pairPredicate)
       .drop("cell", "cix", "ciy")
     // struct args (udf arity cap is 10); per-band fragments out, band
     // index = position. decodeMemo: one payload decode per run of
@@ -396,11 +384,7 @@ object Warp {
               .asDoubleBuffer().get(out)
             (r.getLong(0), out)
           }, len)
-        var n = 0L; var s = 0L; var i = 0
-        while (i < len) {
-          if (!merged(i).isNaN) { n += 1; s += merged(i).toLong }
-          i += 1
-        }
+        val (n, s) = Pixels.validSum(merged)
         (n, s, 0L)
       }
     })

@@ -158,6 +158,52 @@ class ClusterJoinSpec extends SparkSuite {
     assert(expect.exists(p => p._4 > p._3))
   }
 
+  test("emergingHotspots == brute hot-now test × Mann-Kendall class") {
+    import spark.implicits._
+    val pitch = 10L; val tbSize = 10L
+    // (gi, gj) -> event count per time bucket 0..2; bucket 2 is the
+    // final slice. Hot cells hold 30 events there; forty isolated
+    // 1-event cells pull the slice mean down so 30 beats 9·mean.
+    val cells: Seq[((Long, Long), Seq[Int])] = Seq(
+      (0L, 0L) -> Seq(1, 2, 30),    // hot, S = 3  → intensifying
+      (10L, 0L) -> Seq(30, 0, 30),  // hot, S = 0  → persistent
+      (20L, 0L) -> Seq(50, 40, 30), // hot, S = −3 → diminishing
+      (40L, 40L) -> Seq(1, 2, 0),   // absent from the slice, S = 1 → emerging
+      (50L, 50L) -> Seq(1, 0, 2),   // in the slice, not hot, S = 1 → emerging
+      (60L, 60L) -> Seq(3, 0, 1),   // S = −1 → none
+      (70L, 70L) -> Seq(0, 4, 0)) ++ // one bucket, S = 0 → none
+      (0 until 40).map(i => (100L + 2 * i, 100L) -> Seq(0, 0, 1))
+    val pts = for (((gi, gj), cs) <- cells; (c, tb) <- cs.zipWithIndex; e <- 0 until c)
+      yield (gi * pitch + e % pitch, gj * pitch + (e * 3) % pitch,
+        tb * tbSize + (e * 7) % tbSize)
+    // brute force from the points alone
+    val counts = pts.groupBy(p => (p._1 / pitch, p._2 / pitch, p._3 / tbSize))
+      .map { case (k, v) => (k, v.size.toLong) }
+    val tbMax = counts.keys.map(_._3).max
+    val last = counts.collect { case ((gi, gj, tb), c) if tb == tbMax => ((gi, gj), c) }
+    val (tot, ncl) = (last.values.sum, last.size.toLong)
+    val expect = counts.keys.map(k => (k._1, k._2)).toSeq.distinct.map { case (gi, gj) =>
+      val series = counts.collect { case ((g, h, t), c) if g == gi && h == gj => (t, c) }
+        .toSeq.sortBy(_._1).map(_._2)
+      val s = (for (i <- series.indices; j <- (i + 1) until series.size)
+        yield java.lang.Long.signum(series(j) - series(i)).toLong).sum
+      val nsum = (for (di <- -1 to 1; dj <- -1 to 1)
+        yield last.getOrElse((gi + di, gj + dj), 0L)).sum
+      val hot = last.contains((gi, gj)) && nsum * ncl > 9 * tot
+      val cls = if (hot) (if (s > 0) "intensifying" else if (s == 0) "persistent" else "diminishing")
+        else if (s > 0) "emerging" else "none"
+      (gi, gj, series.sum, s, if (hot) 1L else 0L, cls)
+    }.sortBy(p => (p._1, p._2))
+    val got = graft.ops.SpatialJoin
+      .emergingHotspots(pts.toDF("px", "py", "t"), pitch, tbSize)
+      .orderBy("gi", "gj").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4), r.getString(5))).toSeq
+    assert(got === expect)
+    assert(expect.map(_._6).toSet ==
+      Set("intensifying", "persistent", "diminishing", "emerging", "none"))
+  }
+
   test("knoxCounts == brute all-pairs contingency") {
     import spark.implicits._
     val n = 150

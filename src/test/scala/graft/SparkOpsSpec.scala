@@ -14,26 +14,29 @@ class SparkOpsSpec extends SparkSuite {
   private def images(n: Long): DataFrame = Synth.imagesRange(spark, n, 4)
   private def polys(m: Long): DataFrame = Synth.polygonsRange(spark, m)
 
+  /** The (image_id, fid) pairs of a join as a sorted multiset, so a
+    * pair reported twice fails an equality that a set would pass. */
+  private def pairBag(df: DataFrame): Seq[(String, Long)] =
+    df.select("image_id", "fid").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
+
+  /** Brute-force rect join: every open-interval overlapping pair. */
+  private def brutePairs(im: DataFrame, po: DataFrame): Seq[(String, Long)] =
+    pairBag(im.crossJoin(po)
+      .where(col("x0m") < col("px1m") && col("px0m") < col("x1m") &&
+             col("y0m") < col("py1m") && col("py0m") < col("y1m")))
+
   test("joinRects matches brute-force theta join (all strategies)") {
     val im = images(3000).cache()
     val po = polys(40).cache()
-    val brute = im.crossJoin(po)
-      .where(col("x0m") < col("px1m") && col("px0m") < col("x1m") &&
-             col("y0m") < col("py1m") && col("py0m") < col("y1m"))
-      .select("image_id", "fid")
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    val brute = brutePairs(im, po)
     assert(brute.nonEmpty)
-    for ((bcast, salt) <- Seq((true, 0), (false, 0), (false, 8))) {
-      val got = SpatialJoin.joinRects(im, po, 7, bcast, salt)
-        .select("image_id", "fid")
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-      assert(got == brute, s"strategy bcast=$bcast salt=$salt")
-    }
+    for ((bcast, salt) <- Seq((true, 0), (false, 0), (false, 8)))
+      assert(pairBag(SpatialJoin.joinRects(im, po, 7, bcast, salt)) == brute,
+        s"strategy bcast=$bcast salt=$salt")
     // min-corner fast path (image extent ≤ cell size) — identical rows
-    val fast = SpatialJoin.joinRectsSmallImages(im, po, 7)
-      .select("image_id", "fid")
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(fast == brute, "small-image fast path")
+    assert(pairBag(SpatialJoin.joinRectsSmallImages(im, po, 7)) == brute,
+      "small-image fast path")
     // and candidate multiplicity is exactly 1 (no dedup needed)
     val cnt = SpatialJoin.joinRectsSmallImages(im, po, 7)
       .groupBy("image_id", "fid").count()
@@ -116,6 +119,21 @@ class SparkOpsSpec extends SparkSuite {
       !plan.contains("SortMergeJoin"))
   }
 
+  test("shuffled joinRects plan: one SortMergeJoin on the packed cell key") {
+    val im = images(1000)
+    val po = polys(40)
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.get(threshold)
+    spark.conf.set(threshold, "-1")
+    try for ((salt, keys) <- Seq(0 -> "cell", 8 -> "cell, salt")) {
+      val plan = SpatialJoin.joinRects(im, po, 7, broadcastPolys = false, salt = salt)
+        .queryExecution.executedPlan.toString.replaceAll("#\\d+L?", "")
+      assert("SortMergeJoin".r.findAllIn(plan).size == 1, plan)
+      assert(plan.contains(s"SortMergeJoin [$keys], [$keys], Inner"), plan)
+      assert(!plan.contains("NestedLoopJoin") && !plan.contains("CartesianProduct"), plan)
+    } finally spark.conf.set(threshold, saved)
+  }
+
   test("joinPolygons (ray-casting refine) matches JTS brute force") {
     import org.locationtech.jts.geom._
     val gf = new GeometryFactory()
@@ -131,9 +149,7 @@ class SparkOpsSpec extends SparkSuite {
     }
     val polyDf = spark.createDataFrame(pdf)
       .toDF("fid", "geom_wkt", "px0m", "py0m", "px1m", "py1m")
-    val got = SpatialJoin.joinPolygons(im, polyDf, 7)
-      .select("image_id", "fid")
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    val got = pairBag(SpatialJoin.joinPolygons(im, polyDf, 7))
     // JTS oracle
     val rows = im.select("image_id", "x0m", "y0m", "x1m", "y1m").collect()
     val expect = (for {
@@ -151,7 +167,7 @@ class SparkOpsSpec extends SparkSuite {
         new Coordinate(r.getLong(1) / 1000.0, r.getLong(4) / 1000.0),
         new Coordinate(r.getLong(1) / 1000.0, r.getLong(2) / 1000.0)))
       if rect.intersects(poly) && !rect.touches(poly)
-    } yield (r.getString(0), fid)).toSet
+    } yield (r.getString(0), fid)).toSeq.sorted
     assert(got == expect)
   }
 
@@ -619,13 +635,9 @@ class SparkOpsSpec extends SparkSuite {
   test("joinRectsBloom: identical rows to joinRects, real pre-shuffle pruning") {
     val im = images(5000).cache()
     val po = polys(20).cache()
-    val want = SpatialJoin.joinRects(im, po, 7)
-      .select("image_id", "fid").collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSet
-    val got = SpatialJoin.joinRectsBloom(im, po, 7)
-      .select("image_id", "fid").collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(got == want)
+    val want = pairBag(SpatialJoin.joinRects(im, po, 7))
+    assert(want == brutePairs(im, po))
+    assert(pairBag(SpatialJoin.joinRectsBloom(im, po, 7)) == want)
     assert(want.nonEmpty)
     // effectiveness: the bloom drops image cell rows before the
     // shuffle — survivors must be well under the full cover set
