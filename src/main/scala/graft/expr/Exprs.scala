@@ -2,7 +2,8 @@ package graft.expr
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{Block, CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, FloatType, IntegerType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -18,6 +19,8 @@ import graft.index.CellGrid
   *   graft_cell_pack(lonM, latM, res)          → packed long cell id
   *   graft_cell_cover(x0,y0,x1,y1, res)        → array<long> covering
   *   graft_rect_poly(x0,y0,x1,y1, wkt)         → exact rect∩polygon
+  *   graft_rect_probe(x0,y0,x1,y1, cix,ciy,
+  *                    bx0,by0,bx1,by1, res)    → hit indices of a bucket
   */
 
 /** Packed covering-cell id of a point (mdeg) at `res` — the equi-join
@@ -132,6 +135,67 @@ case class HilbertKey(left: Expression, right: Expression, order: Int)
       l: Expression, r: Expression): Expression = copy(l, r, order)
 }
 
+/** The covering-cell rect join's refine over one polygon BUCKET: the
+  * indices (array<int>, ascending) of the bucket boxes (bx0…by1, four
+  * aligned array<bigint>, bx0 ascending) that overlap the probe box
+  * (x0…y1) and whose intersection's min corner lies in the probe row's
+  * cell (cix, ciy) at `res` — `SpatialJoin.overlapsOnce` for a whole
+  * bucket in one static loop ([[Kernels.rectProbe]]). Full codegen:
+  * the generated Java reuses one index buffer per task. Null if any
+  * input is null; bucket boxes have no null elements (a null bbox
+  * covers no cell). */
+case class RectProbe(children: Seq[Expression], res: Int) extends Expression {
+  require(children.length == 10,
+    "graft_rect_probe(x0,y0,x1,y1, cix,ciy, bx0,by0,bx1,by1, res)")
+  private def sh: Int = CellGrid.Shift - res
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def nullable: Boolean = children.exists(_.nullable)
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    if (children.take(6).forall(_.dataType == LongType) &&
+        children.drop(6).forall(_.dataType match {
+          case ArrayType(LongType, _) => true
+          case _ => false
+        }))
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+      "graft_rect_probe(6 × bigint, 4 × array<bigint>, int), got " +
+        children.map(_.dataType).mkString("(", ", ", ")"))
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val v = children.map(_.eval(input))
+    if (v.contains(null)) return null
+    val Seq(x0, y0, x1, y1, cix, ciy) = v.take(6).map(_.asInstanceOf[Long])
+    val Seq(bx0, by0, bx1, by1) = v.drop(6).map(_.asInstanceOf[ArrayData])
+    val hits = new Array[Int](bx0.numElements())
+    val m = Kernels.rectProbe(x0, y0, x1, y1, cix, ciy, sh, bx0, by0, bx1, by1, hits)
+    UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(hits, m))
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cs = children.map(_.genCode(ctx))
+    val anyNull = cs.map(_.isNull.toString).mkString(" || ")
+    val args = cs.map(_.value.toString)
+    val buf = ctx.addMutableState("int[]", "graftProbeHits", v => s"$v = new int[0];")
+    val m = ctx.freshName("graftProbeN")
+    ev.copy(code = Block.blocksToBlock(cs.map(_.code)) + code"""
+      |boolean ${ev.isNull} = $anyNull;
+      |ArrayData ${ev.value} = null;
+      |if (!${ev.isNull}) {
+      |  if ($buf.length < ${args(6)}.numElements()) {
+      |    $buf = new int[${args(6)}.numElements()];
+      |  }
+      |  int $m = graft.expr.Kernels.rectProbe(${args.take(6).mkString(", ")}, $sh,
+      |    ${args.drop(6).mkString(", ")}, $buf);
+      |  ${ev.value} = UnsafeArrayData.fromPrimitiveArray($buf,
+      |    org.apache.spark.unsafe.Platform.INT_ARRAY_OFFSET, $m, 4);
+      |}
+      """.stripMargin)
+  }
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): Expression = copy(newChildren, res)
+}
+
 object GraftFunctions {
   private def intLit(e: Expression, name: String): Int = e match {
     case Literal(v: Int, IntegerType) => v
@@ -161,6 +225,8 @@ object GraftFunctions {
     "graft_cell_pack" -> (es => CellPack(es(0), es(1), es(2))),
     "graft_cell_cover" -> (es => CellCover(es)),
     "graft_rect_poly" -> (es => RectIntersectsPoly(es)),
+    "graft_rect_probe" -> (es => RectProbe(es.take(10),
+      intLit(es(10), "graft_rect_probe res"))),
     // text/vector hot kernels (round 4): codegen expressions calling
     // static Kernels methods — see VecExprs
     "graft_cosine" -> (es => CosineSim(es(0), es(1))),

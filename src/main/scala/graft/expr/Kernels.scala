@@ -2,6 +2,7 @@ package graft.expr
 
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
+import graft.index.CellGrid
 
 /** Static JVM kernels behind the codegen expressions in [[VecExprs]] —
   * called directly from generated Java (one static call per row, no
@@ -271,5 +272,33 @@ object Kernels {
       s >>= 1
     }
     d
+  }
+
+  /** The rect join's refine over one polygon bucket: writes to `hits`
+    * (length ≥ the bucket's) the indices j, ascending, whose box
+    * [bx0(j), bx1(j)) × [by0(j), by1(j)) overlaps the open probe box
+    * and whose intersection's min corner lies in cell (cix, ciy) at
+    * shift `sh`; returns how many. The same predicate as
+    * `SpatialJoin.overlapsOnce`, one static loop per probe row instead
+    * of one joined row per candidate. `bx0` must be ascending: the loop
+    * stops at the first box that starts at or right of x1. Called from
+    * RectProbe. */
+  def rectProbe(x0: Long, y0: Long, x1: Long, y1: Long, cix: Long, ciy: Long, sh: Int,
+                bx0: ArrayData, by0: ArrayData, bx1: ArrayData, by1: ArrayData,
+                hits: Array[Int]): Int = {
+    val n = bx0.numElements()
+    var m = 0
+    var j = 0
+    while (j < n && bx0.getLong(j) < x1) {
+      val px0 = bx0.getLong(j); val py0 = by0.getLong(j)
+      if (x0 < bx1.getLong(j) && y0 < by1.getLong(j) && py0 < y1 &&
+          ((math.max(x0, px0) + CellGrid.OffX) >> sh) == cix &&
+          ((math.max(y0, py0) + CellGrid.OffY) >> sh) == ciy) {
+        hits(m) = j
+        m += 1
+      }
+      j += 1
+    }
+    m
   }
 }

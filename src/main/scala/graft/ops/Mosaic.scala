@@ -36,11 +36,14 @@ object Mosaic {
     val shift = CellGrid.Shift - res
     val size = 1L << shift
     val half = size / 2
-    val pCells = SpatialJoin.withCoverCells(polys, res, "px0m", "py0m", "px1m", "py1m")
+    import SpatialJoin.{ImageBox, PolyBox, coverCells}
+    // one packed `cell` key: the broadcast builds a LongHashedRelation
+    val pCells = coverCells(polys, res, PolyBox)
       .withColumn("ccx", col("cix") * size - CellGrid.OffX + half)
       .withColumn("ccy", col("ciy") * size - CellGrid.OffY + half)
-    val iCells = SpatialJoin.withCoverCells(images, res, "x0m", "y0m", "x1m", "y1m")
-    iCells.join(broadcast(pCells), Seq("cix", "ciy"))
+      .drop("cix", "ciy")
+    val iCells = coverCells(images, res, ImageBox)
+    iCells.join(broadcast(pCells), Seq("cell"))
       .where(col("x0m") <= col("ccx") && col("ccx") < col("x1m") &&
              col("y0m") <= col("ccy") && col("ccy") < col("y1m"))
       .groupBy(col("fid"), col("cix"), col("ciy"))

@@ -23,9 +23,10 @@ import graft.index.CellGrid
   *     corner (the unique reporter cell): no distinct shuffle. The
   *     probe side keeps its (cix, ciy) for that test; the build side
   *     drops them.
-  *   - small build sides broadcast (zero shuffle); large ones take a
-  *     shuffled join on `cell`, with optional SALTING of hot cells plus
-  *     AQE skew-split as the backstop.
+  *   - small build sides broadcast (zero shuffle); large ones take the
+  *     shuffled BUCKET join ([[bucketJoin]]): polygons grouped per cell,
+  *     probed by a codegen kernel, no row per candidate pair; optional
+  *     SALTING spreads hot cells.
   * Users: [[joinRects]], [[joinRectsBloom]], [[joinPolygons]],
   * [[proximityEdges]] and `Warp.warpInto`; [[joinRectsSmallImages]]
   * keys on min corners instead and shares only [[overlaps]].
@@ -60,9 +61,11 @@ object SpatialJoin {
         explode(sequence(cellIy(col(y0), res), cellIy(col(y1) - 1, res))))
 
   /** The names of a layer's four mdeg bbox columns. */
-  private[ops] case class Box(x0: String, y0: String, x1: String, y1: String)
+  private[ops] case class Box(x0: String, y0: String, x1: String, y1: String) {
+    def cols: Seq[String] = Seq(x0, y0, x1, y1)
+  }
   private[ops] val ImageBox = Box("x0m", "y0m", "x1m", "y1m")
-  private val PolyBox = Box("px0m", "py0m", "px1m", "py1m")
+  private[ops] val PolyBox = Box("px0m", "py0m", "px1m", "py1m")
 
   /** One row per covering cell of `b` at `res`: (cix, ciy) plus the
     * packed key `cell`. */
@@ -154,29 +157,80 @@ object SpatialJoin {
 
   /** Rect-layer spatial join. `images` needs (x0m,y0m,x1m,y1m), `polys`
     * needs (px0m,py0m,px1m,py1m). Returns all pairs with OPEN-interval
-    * rectangle overlap, deduped, with all input columns.
+    * rectangle overlap, deduped, with all input columns: (cell,
+    * images…, cix, ciy, polys…) on every branch.
+    *
+    * `broadcastPolys = true` hints a broadcast of the polygon cover
+    * rows. `false` takes the shuffled bucket join ([[bucketJoin]]), but
+    * it only drops that hint: under the session's
+    * `spark.sql.autoBroadcastJoinThreshold` Spark (or AQE at run time)
+    * may still broadcast the smaller side, which on this branch is the
+    * polygon bucket table. Set the threshold to −1 to force the
+    * sort-merge join.
     *
     * `salt > 1` spreads each hot cell across `salt` shuffle keys by
     * hashing `saltKey` (any image-side column with per-row-distinct
     * values — default the synth key "k"; pass e.g. "image_id" for
-    * other tables). Salting changes only the shuffle distribution,
-    * never the result rows. */
+    * other tables) and replicates the polygon buckets `salt`×; it
+    * always takes the shuffled branch. Salting changes only the shuffle
+    * distribution, never the result rows. */
   def joinRects(images: DataFrame, polys: DataFrame, res: Int = 7,
                 broadcastPolys: Boolean = true, salt: Int = 0,
                 saltKey: String = "k"): DataFrame = {
     val imgCells = coverCells(images, res, ImageBox)
+    if (salt <= 1 && broadcastPolys)
+      imgCells.join(broadcast(coverCells(polys, res, PolyBox).drop("cix", "ciy")),
+        Seq("cell")).where(overlapsOnce(ImageBox, PolyBox, res))
+    else bucketJoin(imgCells, polys, res, salt, saltKey)
+  }
+
+  /** Most polygons one bucket row holds: a denser cell spans ⌈n/B⌉
+    * rows with the same key, so row size does not grow with density. */
+  private[graft] val BucketSize = 128
+
+  /** Shuffled covering-cell join without candidate rows. One aggregate
+    * (one exchange) groups the polygon cover rows on the join keys
+    * (`cell`, plus `salt` when salting) into bucket rows of at most
+    * [[BucketSize]] polygons: `__ps` holds them as structs of every
+    * polygon column, `__bx0`…`__by1` their boxes as primitive arrays
+    * aligned with it. The bucket grouping's hash partitioning satisfies
+    * the sort-merge join, so the join adds only the image side's
+    * exchange. Each image cover row meets its cell's bucket rows once,
+    * [[graft.expr.RectProbe]] returns the polygons that pass
+    * [[overlapsOnce]], and explode + element access give back the
+    * polygon columns. `imgCells` is [[coverCells]] of the images (a
+    * caller may filter it first). */
+  private def bucketJoin(imgCells: DataFrame, polys: DataFrame, res: Int,
+                         salt: Int, saltKey: String): DataFrame = {
+    graft.expr.GraftFunctions.register(imgCells.sparkSession)
+    def q(c: String) = col("`" + c.replace("`", "``") + "`")
     val polCells = coverCells(polys, res, PolyBox).drop("cix", "ciy")
-    val once = overlapsOnce(ImageBox, PolyBox, res)
-    if (salt <= 1)
-      imgCells.join(if (broadcastPolys) broadcast(polCells) else polCells,
-        Seq("cell")).where(once)
-    else
-      // salt the (usually skew-prone) image side; replicate polygons
-      imgCells
-        .withColumn("salt", pmod(hash(col(saltKey)).cast("long"), lit(salt.toLong)))
-        .join(polCells.withColumn("salt",
-          explode(sequence(lit(0L), lit(salt.toLong - 1)))), Seq("cell", "salt"))
-        .where(once)
+    val (probe, build, keys) =
+      if (salt <= 1) (imgCells, polCells, Seq("cell"))
+      else (imgCells.withColumn("salt", pmod(hash(col(saltKey)).cast("long"), lit(salt.toLong))),
+        polCells.withColumn("salt", explode(sequence(lit(0L), lit(salt.toLong - 1)))),
+        Seq("cell", "salt"))
+    // one list per key, sorted on px0m (the struct's first field) so
+    // the probe can stop at the first polygon right of the image; a
+    // cell denser than BucketSize splits into ⌈n/B⌉ sorted slices
+    val fields = PolyBox.x0 +: polys.columns.toSeq.filter(_ != PolyBox.x0)
+    val box = Seq("__bx0", "__by0", "__bx1", "__by1")
+    val buckets = build.groupBy(keys.map(col): _*)
+      .agg(sort_array(collect_list(struct(fields.map(q): _*))).as("__all"))
+      .withColumn("__slot", explode(sequence(lit(0), Tiling.idiv(size(col("__all")) - 1,
+        lit(BucketSize)).cast("int"))))
+      .select(keys.map(col) :+
+        slice(col("__all"), col("__slot") * BucketSize + 1, lit(BucketSize)).as("__ps"): _*)
+      .select(keys.map(col) ++ Seq(col("__ps")) ++ PolyBox.cols.zip(box).map {
+        case (c, b) => col("__ps").getField(c).as(b)
+      }: _*)
+    val probeCols = ("cell" +: imgCells.columns.toSeq.filter(_ != "cell")).map(q)
+    val hits = call_function("graft_rect_probe",
+      ((ImageBox.cols ++ Seq("cix", "ciy") ++ box).map(col) :+ lit(res)): _*)
+    val p = col("__ps")(col("__i"))
+    probe.join(buckets, keys)
+      .select(probeCols ++ Seq(col("__ps"), explode(hits).as("__i")): _*)
+      .select(probeCols ++ polys.columns.toSeq.map(c => p.getField(c).as(c)): _*)
   }
 
   /** Z-order key column from two cell-coordinate columns — the
@@ -349,22 +403,20 @@ object SpatialJoin {
     * is built distributed (`stat.bloomFilter` tree-reduces sketch
     * partials; no row collect), broadcast (~1.2 MB at 10⁶ cells /
     * 1% fpp), and applied to image cell rows BEFORE they enter the
-    * shuffle — images nowhere near any polygon never ship. False
-    * positives only cost shuffled bytes; the exact equi-join + refine
-    * keeps the result IDENTICAL to [[joinRects]] (oracle + spec
-    * asserted). The hand-rolled analog of AQE's runtime row-level
+    * shuffle — images nowhere near any polygon never ship. The join is
+    * then [[joinRects]]' shuffled bucket join ([[bucketJoin]]) on the
+    * filtered rows. False positives only cost shuffled bytes; the exact
+    * bucket probe keeps the result IDENTICAL to [[joinRects]] (oracle +
+    * spec asserted). The hand-rolled analog of AQE's runtime row-level
     * filtering, usable on any Spark version and any plan shape. */
   def joinRectsBloom(images: DataFrame, polys: DataFrame, res: Int = 7,
                      expectedCells: Long = 1L << 20,
                      fpp: Double = 0.01): DataFrame = {
-    val polKeyed = coverCells(polys, res, PolyBox).drop("cix", "ciy")
-    val bloom = polKeyed.stat.bloomFilter("cell", expectedCells, fpp)
+    val bloom = coverCells(polys, res, PolyBox).stat.bloomFilter("cell", expectedCells, fpp)
     val bc = images.sparkSession.sparkContext.broadcast(bloom)
     val might = udf((c: Long) => bc.value.mightContainLong(c))
-    coverCells(images, res, ImageBox)
-      .filter(might(col("cell")))
-      .join(polKeyed, Seq("cell"))
-      .where(overlapsOnce(ImageBox, PolyBox, res))
+    bucketJoin(coverCells(images, res, ImageBox).filter(might(col("cell"))),
+      polys, res, salt = 0, saltKey = "k")
   }
 
   /** Small-image fast path: one row per image through the join, keyed

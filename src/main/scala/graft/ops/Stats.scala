@@ -144,22 +144,6 @@ object Stats {
         Pixels.convolveNodata(p, w, h, Array.fill(9)(1.0), 3, 3), 1e6)
     })
 
-  /** ZONAL statistics: per-polygon aggregates of the pixels whose
-    * CENTERS fall inside the polygon rect — the reference's
-    * extract-by-vector pattern (GeoImage.extract + feature mask,
-    * /root/reference/GIP/GeoImage.cpp:331-363) as a distributed join:
-    * covering-cell spatial join (images × polygons), per-pair windowed
-    * pixel kernel (decode once, iterate ONLY the clamped intersection
-    * window — never the whole image), then an ordinary groupBy(fid)
-    * rollup. Pixel (x,y) center = (x0m + resM·x + resM/2,
-    * y1m − resM·y − resM/2) (north-up, row 0 top); inclusion is
-    * half-open [p0, p1) in both axes, mirrored exactly by the oracle.
-    *
-    * Scale: the join is the engine's equi-cell join (broadcast or
-    * shuffled), the kernel is per-pair with window-bounded cost, and
-    * the rollup is a map-side-combined hash aggregate on fid — no
-    * driver involvement, no all-pixels shuffle (only the 4-field
-    * per-pair summary moves). */
   private def ceilDiv(a: Long, b: Long): Long = Math.floorDiv(a + b - 1, b)
 
   /** Shared zonal kernel: (n, Σv, min, max) over valid pixels in the
@@ -202,6 +186,27 @@ object Stats {
            min(col("z._3")).as("vmin"),
            max(col("z._4")).as("vmax"))
 
+  /** ZONAL statistics: per-polygon aggregates of the pixels whose
+    * CENTERS fall inside the polygon rect — the reference's
+    * extract-by-vector pattern (GeoImage.extract + feature mask,
+    * /root/reference/GIP/GeoImage.cpp:331-363) as a distributed join:
+    * covering-cell spatial join (images × polygons), per-pair windowed
+    * pixel kernel (decode once, iterate ONLY the clamped intersection
+    * window — never the whole image), then an ordinary groupBy(fid)
+    * rollup. Pixel (x,y) center = (x0m + resM·x + resM/2,
+    * y1m − resM·y − resM/2) (north-up, row 0 top); inclusion is
+    * half-open [p0, p1) in both axes, mirrored exactly by the oracle.
+    *
+    * Scale: the join is the engine's equi-cell join (broadcast or
+    * shuffled), the kernel is per-pair with window-bounded cost, and
+    * the rollup is a map-side-combined hash aggregate on fid — no
+    * driver involvement, no all-pixels shuffle (only the 4-field
+    * per-pair summary moves).
+    *
+    * `broadcastPolys = false` is [[SpatialJoin.joinRects]]'s: it drops
+    * the broadcast hint and takes the shuffled bucket join, but at the
+    * session's `spark.sql.autoBroadcastJoinThreshold` Spark or AQE may
+    * still broadcast the smaller side (the polygon bucket table). */
   def zonalStats(imagesWithBytes: DataFrame, polys: DataFrame, nb: Int,
                  band: Int = 0, resM: Long = 4L,
                  broadcastPolys: Boolean = true): DataFrame = {

@@ -290,7 +290,9 @@ object PlanDump {
     md.append(fmt("bloom-prefiltered shuffled spatial join", bloomJoin,
       "The Bloom filter over polygon cells applies in the image-side " +
         "scan projection (before the exchange), so pruned rows never " +
-        "ship; the join itself stays the exact cell equi-join."))
+        "ship; the surviving cover rows probe the per-cell polygon " +
+        "buckets (collect_list aggregate on `cell`) with the " +
+        "graft_rect_probe kernel."))
 
     val cube = Synth.images(spark, dir)
       .cube(col("fmt"), col("nw"))

@@ -119,19 +119,127 @@ class SparkOpsSpec extends SparkSuite {
       !plan.contains("SortMergeJoin"))
   }
 
+  /** Runs `f` with the session confs `kvs` set, restoring them after. */
+  private def withConf[A](kvs: (String, String)*)(f: => A): A = {
+    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("shuffled joinRects plan: one SortMergeJoin on the packed cell key") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
     val im = images(1000)
     val po = polys(40)
-    val threshold = "spark.sql.autoBroadcastJoinThreshold"
-    val saved = spark.conf.get(threshold)
-    spark.conf.set(threshold, "-1")
-    try for ((salt, keys) <- Seq(0 -> "cell", 8 -> "cell, salt")) {
-      val plan = SpatialJoin.joinRects(im, po, 7, broadcastPolys = false, salt = salt)
-        .queryExecution.executedPlan.toString.replaceAll("#\\d+L?", "")
-      assert("SortMergeJoin".r.findAllIn(plan).size == 1, plan)
-      assert(plan.contains(s"SortMergeJoin [$keys], [$keys], Inner"), plan)
-      assert(!plan.contains("NestedLoopJoin") && !plan.contains("CartesianProduct"), plan)
-    } finally spark.conf.set(threshold, saved)
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      for ((salt, keys) <- Seq(0 -> "cell", 8 -> "cell, salt")) {
+        val exec = SpatialJoin.joinRects(im, po, 7, broadcastPolys = false, salt = salt)
+          .queryExecution.executedPlan
+        val plan = exec.toString.replaceAll("#\\d+L?", "")
+        assert("SortMergeJoin".r.findAllIn(plan).size == 1, plan)
+        assert(plan.contains(s"SortMergeJoin [$keys], [$keys], Inner"), plan)
+        assert(!plan.contains("NestedLoopJoin") && !plan.contains("CartesianProduct"), plan)
+        // one exchange per side, as many as the row-candidate join had:
+        // the bucket aggregate's partitioning satisfies the join
+        assert("Exchange".r.findAllIn(plan).size == 2, plan)
+        // the build side is the polygon bucket aggregate and the join
+        // carries no refine condition, so no row per candidate pair
+        val smj = exec.asInstanceOf[AdaptiveSparkPlanExec].executedPlan
+          .collectFirst { case j: SortMergeJoinExec => j }.get
+        assert(smj.right.find(_.isInstanceOf[ObjectHashAggregateExec]).isDefined, plan)
+        assert(smj.left.find(_.isInstanceOf[ObjectHashAggregateExec]).isEmpty, plan)
+        assert(smj.condition.isEmpty, plan)
+      }
+    }
+  }
+
+  /** Images and polygons around one res-7 cell: 2·BucketSize + 40 small
+    * polygons inside it (its bucket splits into three rows), 30
+    * polygons half a cell to 2½ cells wide, and images up to two cells
+    * wide around it, so many pairs overlap in two or more shared cells. */
+  private def bucketFixture(): (DataFrame, DataFrame) = {
+    val cs = CellGrid.cellSize(7)
+    val ox = Math.floorDiv(CellGrid.OffX, cs) * cs - CellGrid.OffX
+    val oy = Math.floorDiv(CellGrid.OffY, cs) * cs - CellGrid.OffY
+    val dense = 2L * SpatialJoin.BucketSize + 40
+    val id = col("id")
+    val inCell = id < dense
+    val po = spark.range(0, dense + 30).select(id.as("fid"),
+      when(inCell, lit(ox) + id * 37 % (cs - 600))
+        .otherwise(lit(ox - cs) + id * 997 % (2 * cs)).as("px0m"),
+      when(inCell, lit(oy) + id * 53 % (cs - 600))
+        .otherwise(lit(oy - cs) + id * 631 % (2 * cs)).as("py0m"),
+      when(inCell, lit(50) + id * 11 % 500).otherwise(lit(cs / 2) + id * 13 % (2 * cs)).as("pwm"),
+      when(inCell, lit(50) + id * 7 % 500).otherwise(lit(cs / 2) + id * 17 % (2 * cs)).as("phm"))
+      .withColumn("px1m", col("px0m") + col("pwm"))
+      .withColumn("py1m", col("py0m") + col("phm"))
+    val im = spark.range(0, 1500).select(id.as("k"), concat(lit("i-"), id).as("image_id"),
+      (lit(ox - 2 * cs) + id * 7919 % (5 * cs)).as("x0m"),
+      (lit(oy - 2 * cs) + id * 104729 % (5 * cs)).as("y0m"),
+      (lit(1) + id * 31 % (2 * cs)).as("w"), (lit(1) + id * 29 % (2 * cs)).as("h"))
+      .withColumn("x1m", col("x0m") + col("w"))
+      .withColumn("y1m", col("y0m") + col("h"))
+    (im.cache(), po.cache())
+  }
+
+  test("bucket join: shuffled and salted joinRects equal brute force on a dense, multi-cell fixture") {
+    val (im, po) = bucketFixture()
+    val perCell = SpatialJoin.withCoverCells(po, 7, "px0m", "py0m", "px1m", "py1m")
+      .groupBy("cix", "ciy").count().agg(max("count")).head().getLong(0)
+    assert(perCell > 2 * SpatialJoin.BucketSize, s"densest cell holds $perCell polygons")
+    val overlap = col("x0m") < col("px1m") && col("px0m") < col("x1m") &&
+      col("y0m") < col("py1m") && col("py0m") < col("y1m")
+    val multiCell = im.crossJoin(po).where(overlap).where(
+      SpatialJoin.cellIx(least(col("x1m"), col("px1m")) - 1, 7) >
+        SpatialJoin.cellIx(greatest(col("x0m"), col("px0m")), 7) ||
+      SpatialJoin.cellIy(least(col("y1m"), col("py1m")) - 1, 7) >
+        SpatialJoin.cellIy(greatest(col("y0m"), col("py0m")), 7)).count()
+    assert(multiCell >= 50, s"$multiCell pairs share two or more cells")
+    val brute = brutePairs(im, po)
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      for (salt <- Seq(0, 8))
+        assert(pairBag(SpatialJoin.joinRects(im, po, 7, broadcastPolys = false, salt = salt)) == brute,
+          s"salt=$salt")
+      assert(pairBag(SpatialJoin.joinRectsBloom(im, po, 7)) == brute, "bloom")
+    }
+  }
+
+  test("joinRects: broadcast, shuffled, salted and bloom branches have the same columns") {
+    val (im, po) = bucketFixture()
+    val want = SpatialJoin.joinRects(im, po, 7).columns.toSeq
+    assert(want == Seq("cell", "k", "image_id", "x0m", "y0m", "w", "h", "x1m", "y1m", "cix", "ciy",
+      "fid", "px0m", "py0m", "pwm", "phm", "px1m", "py1m"))
+    assert(SpatialJoin.joinRects(im, po, 7, broadcastPolys = false).columns.toSeq == want)
+    assert(SpatialJoin.joinRects(im, po, 7, broadcastPolys = false, salt = 8).columns.toSeq == want)
+    assert(SpatialJoin.joinRectsBloom(im, po, 7).columns.toSeq == want)
+  }
+
+  test("bucket join: the probe kernel's interpreted eval gives the same rows as its codegen") {
+    val (im, po) = bucketFixture()
+    val brute = brutePairs(im, po)
+    object Stages extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    /** The join's pairs, and whether its final plan has a whole-stage
+      * codegen node. */
+    def run(salt: Int): (Seq[(String, Long)], Boolean) = {
+      val j = SpatialJoin.joinRects(im, po, 7, broadcastPolys = false, salt = salt)
+        .select("image_id", "fid")
+      val pairs = j.collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
+      (pairs, Stages.find(j.queryExecution.executedPlan)(
+        _.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec]).isDefined)
+    }
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      for (salt <- Seq(0, 8)) {
+        assert(run(salt) == ((brute, true)), s"codegen, salt=$salt")
+        withConf("spark.sql.codegen.wholeStage" -> "false",
+            "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
+          assert(run(salt) == ((brute, false)), s"interpreted, salt=$salt")
+        }
+      }
+    }
   }
 
   test("joinPolygons (ray-casting refine) matches JTS brute force") {
