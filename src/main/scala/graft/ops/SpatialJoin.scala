@@ -39,6 +39,17 @@ import graft.index.CellGrid
   * runs on the candidates. Users: ripley, colocation, knox, dbscan and
   * `Tracks.convoyPairs`; [[kdeHeatmap]] and [[neighbourSum]] reuse the
   * ring alone.
+  *
+  * NULL-TOLERANT KEYS AND PREDICATES: a join key or condition that is
+  * null on a null input lets Catalyst infer `isnotnull(...)` on every
+  * column it reads and push that filter below the Project that derives
+  * them, where it is rewritten over the alias definitions: each derived
+  * box corner and the packed key are then computed twice per row, once
+  * in the filter and once in the Project. So [[overlaps]] and
+  * [[overlapsOnce]] are `coalesce(<conjunction>, false)` and
+  * [[joinRectsSmallImages]] keys on `coalesce(packCell(…), NoCell)`.
+  * Under an inner join a null box matched nothing before and matches
+  * nothing now, so the rows are the same; only the filter is gone.
   */
 object SpatialJoin {
 
@@ -73,17 +84,22 @@ object SpatialJoin {
     withCoverCells(df, res, b.x0, b.y0, b.x1, b.y1)
       .withColumn("cell", packCell(col("cix"), col("ciy")))
 
-  /** Open-interval overlap of boxes `a` and `b`. */
-  private def overlaps(a: Box, b: Box): Column =
+  /** The open-interval overlap conjunction, null where a corner is. */
+  private def overlapTest(a: Box, b: Box): Column =
     col(a.x0) < col(b.x1) && col(b.x0) < col(a.x1) &&
     col(a.y0) < col(b.y1) && col(b.y0) < col(a.y1)
+
+  /** Open-interval overlap of boxes `a` and `b`; false, never null, on
+    * a null corner (null-tolerant, see the object scaladoc). */
+  private def overlaps(a: Box, b: Box): Column =
+    coalesce(overlapTest(a, b), lit(false))
 
   /** [[overlaps]] reported once: only in the cell (cix, ciy) of the
     * probe row that holds the intersection's min corner. */
   private[ops] def overlapsOnce(a: Box, b: Box, res: Int): Column =
-    overlaps(a, b) &&
-    cellIx(greatest(col(a.x0), col(b.x0)), res) === col("cix") &&
-    cellIy(greatest(col(a.y0), col(b.y0)), res) === col("ciy")
+    coalesce(overlapTest(a, b) &&
+      cellIx(greatest(col(a.x0), col(b.x0)), res) === col("cix") &&
+      cellIy(greatest(col(a.y0), col(b.y0)), res) === col("ciy"), lit(false))
 
   /** Add the 3×3 ring of cells around (ix, iy) as (rx, ry): nine rows
     * per input row. `rx`/`ry` may name `ix`/`iy` to replace them. */
@@ -445,11 +461,19 @@ object SpatialJoin {
     // LongHashedRelation for the broadcast build (a two-column key
     // would fall back to the generic UnsafeHashedRelation and allocate
     // per probe row)
-    val imgCells = images.withColumn("cell",
-      packCell(cellIx(col("x0m"), kr), cellIy(col("y0m"), kr)))
-    imgCells.join(broadcast(polyKeyCells(polys, kr)), Seq("cell"))
+    images.withColumn("cell", minCornerKey(kr))
+      .join(broadcast(polyKeyCells(polys, kr)), Seq("cell"))
       .where(overlaps(ImageBox, PolyBox)).drop("cell")
   }
+
+  /** The key of an image with a null min corner in
+    * [[joinRectsSmallImages]]: no packed key equals it (|cell| < 2⁴⁵). */
+  private val NoCell = Long.MinValue
+
+  /** Probe key of [[joinRectsSmallImages]]: the packed cell of the
+    * image's min corner at `kr`, or [[NoCell]] if a corner is null. */
+  private[graft] def minCornerKey(kr: Int): Column =
+    coalesce(packCell(cellIx(col("x0m"), kr), cellIy(col("y0m"), kr)), lit(NoCell))
 
   /** Finest resolution `≥ res` whose cell edge is at least `maxExtentM`. */
   private[graft] def keyRes(res: Int, maxExtentM: Long): Int =

@@ -92,8 +92,10 @@ object PlanDump {
         |""".stripMargin)
     md.append(fmt("Headline spatial join + crop + tile map", headline,
       "One map-only stage: packed-long-cell BroadcastHashJoin " +
-        "(LongHashedRelation), zero shuffles before the final aggregate; " +
-        "scan prunes to the range key."))
+        "(LongHashedRelation), zero shuffles before the final aggregate. " +
+        "The key and overlap test are null-tolerant (coalesce), so no " +
+        "inferred isnotnull Filter re-derives the image boxes between " +
+        "the Range and the join: each box is computed once per row."))
     md.append(fmt("warp_into (covering-cell tile gather, all 6 bands)", warp,
       "The image×tile pair join is the covering-cell EQUI-join " +
         "(round-2 verdict's BroadcastNestedLoopJoin is gone); the " +

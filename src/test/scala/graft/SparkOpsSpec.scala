@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.Geom
 import graft.gen.Synth
@@ -20,11 +20,13 @@ class SparkOpsSpec extends SparkSuite {
     df.select("image_id", "fid").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
 
-  /** Brute-force rect join: every open-interval overlapping pair. */
-  private def brutePairs(im: DataFrame, po: DataFrame): Seq[(String, Long)] =
+  /** Brute-force rect join: every open-interval overlapping pair that
+    * also passes `refine`. */
+  private def brutePairs(im: DataFrame, po: DataFrame,
+                         refine: Column = lit(true)): Seq[(String, Long)] =
     pairBag(im.crossJoin(po)
       .where(col("x0m") < col("px1m") && col("px0m") < col("x1m") &&
-             col("y0m") < col("py1m") && col("py0m") < col("y1m")))
+             col("y0m") < col("py1m") && col("py0m") < col("y1m") && refine))
 
   test("joinRects matches brute-force theta join (all strategies)") {
     val im = images(3000).cache()
@@ -117,6 +119,17 @@ class SparkOpsSpec extends SparkSuite {
     // broadcast side joins on ONE long key (LongHashedRelation path)
     assert(plan.contains("HashedRelationBroadcastMode(List(input[") &&
       !plan.contains("SortMergeJoin"))
+    // the key and overlap test are null-tolerant, so no inferred
+    // null filter between the image Range and the join re-derives the
+    // image boxes
+    assert(!plan.contains("isnotnull("), s"inferred null filter in headline plan:\n$plan")
+  }
+
+  test("broadcast joinRects plan: no inferred null filter on the derived image boxes") {
+    val plan = SpatialJoin.joinRects(images(1000), polys(40), 7)
+      .queryExecution.executedPlan.toString.replaceAll("#\\d+L?", "")
+    assert(plan.contains("BroadcastHashJoin [cell], [cell], Inner"), plan)
+    assert(!plan.contains("isnotnull("), plan)
   }
 
   /** Runs `f` with the session confs `kvs` set, restoring them after. */
@@ -240,6 +253,54 @@ class SparkOpsSpec extends SparkSuite {
         }
       }
     }
+  }
+
+  /** Synth images and rect polygons (with `geom_wkt`), plus copies
+    * with a null box corner: images with a null `x1m` or `y0m` and
+    * polygons with a null `px0m`. Returns (images, polygons) with and
+    * without the null-corner copies. */
+  private def nullBoxFixture(): (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val deg = (c: String) => (col(c) / 1000.0).cast("string")
+    val wkt = concat(lit("POLYGON (("), deg("px0m"), lit(" "), deg("py0m"), lit(", "),
+      deg("px1m"), lit(" "), deg("py0m"), lit(", "), deg("px1m"), lit(" "), deg("py1m"),
+      lit(", "), deg("px0m"), lit(" "), deg("py1m"), lit(", "), deg("px0m"), lit(" "),
+      deg("py0m"), lit("))"))
+    val (im, po) = (images(3000), polys(40).withColumn("geom_wkt", wkt))
+    val nul = lit(null).cast("long")
+    def nullCopy(df: DataFrame, id: String, off: Long, box: String) =
+      df.withColumn(id, col(id) + off).withColumn(box, nul)
+    val imNull = nullCopy(im.where(col("k") % 3 === 0), "k", 1L << 20, "x1m")
+      .unionByName(nullCopy(im.where(col("k") % 3 === 1), "k", 2L << 20, "y0m"))
+      .withColumn("image_id", concat(lit("null-"), col("k")))
+    val poNull = nullCopy(po, "fid", 1L << 20, "px0m")
+    (im.unionByName(imNull).cache(), po.unionByName(poNull).cache(), im.cache(), po.cache())
+  }
+
+  test("spatial joins skip null-corner boxes: each equals brute force over the non-null rows") {
+    val (imAll, poAll, im, po) = nullBoxFixture()
+    val brute = brutePairs(im, po)
+    assert(brute.nonEmpty)
+    assert(imAll.count() == 5000 && poAll.count() == 80)
+    val joins = Seq(
+      "small images" -> (() => SpatialJoin.joinRectsSmallImages(imAll, poAll, 7)),
+      "broadcast" -> (() => SpatialJoin.joinRects(imAll, poAll, 7)),
+      "shuffled" -> (() => SpatialJoin.joinRects(imAll, poAll, 7, broadcastPolys = false)),
+      "salt 8" -> (() => SpatialJoin.joinRects(imAll, poAll, 7, broadcastPolys = false, salt = 8)),
+      "bloom" -> (() => SpatialJoin.joinRectsBloom(imAll, poAll, 7)))
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      for ((name, join) <- joins) assert(pairBag(join()) == brute, name)
+    }
+    val refine = call_function("graft_rect_poly",
+      col("x0m"), col("y0m"), col("x1m"), col("y1m"), col("geom_wkt"))
+    val got = pairBag(SpatialJoin.joinPolygons(imAll, poAll, 7))
+    val bruteRefined = brutePairs(im, po, refine)
+    assert(bruteRefined.nonEmpty && got == bruteRefined, "joinPolygons")
+    // a null min corner keys to a cell no polygon covers, so those
+    // images meet no build row at all
+    val kr = SpatialJoin.keyRes(7, 1024)
+    val nullKeys = imAll.where(col("y0m").isNull).select(SpatialJoin.minCornerKey(kr).as("cell"))
+    assert(nullKeys.count() == 1000)
+    assert(nullKeys.join(SpatialJoin.polyKeyCells(poAll, kr), "cell").count() == 0)
   }
 
   test("joinPolygons (ray-casting refine) matches JTS brute force") {
