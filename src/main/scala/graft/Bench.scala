@@ -327,24 +327,6 @@ object Bench {
     val inc1000Sec = wall(graft.text.TextOps.jaccardPairsIncrementalBands(
       corpusBands, docsTbl, deltaOf(1000), 0.5).count())
 
-    // Terrain iteration-count evidence: on a ramp DEM the flow path
-    // length is ~the image width, so frontier propagation would take
-    // ~width rounds while pointer-doubling accumulation and watershed
-    // take ~log2(width) — measured, not asserted.
-    val (accRounds, wsRounds, rampLen) = {
-      import spark.implicits._
-      val rw = 96; val rh = 4
-      val p = Array.tabulate(rw * rh)(i => (100 + (i % rw)).toDouble)
-      val dem = Seq((0L, "ramp", rw.toLong, rh.toLong,
-          graft.core.Codec.encode(Array(p), rw, rh, "raw-i16le")))
-        .toDF("k", "image_id", "w", "h", "dem_bytes")
-      val (acc, accN) = graft.ops.Terrain.flowAccumRounds(dem)
-      acc.count()
-      val (ws, wsN) = graft.ops.Terrain.watershedRounds(dem)
-      ws.count()
-      (accN, wsN, rw)
-    }
-
     // Integral-image cost model: the SAT box kernel must be radius-
     // INDEPENDENT while the naive window scan is O(k²). Single-thread
     // driver-side timing of the kernel arithmetic itself (this is an
@@ -745,13 +727,6 @@ object Bench {
          |(${f"${naive15Sec / naive3Sec}%.1f"}× — tracks (2r+1)²:
          |961/49 = 19.6×). q_integral_box / q_local_stats ride the SAT
          |path; the DuckDB oracle replays the naive scan.
-         |
-         |Terrain iteration counts on a ${rampLen}-cell-path ramp DEM
-         |(measured shuffle rounds): flow ACCUMULATION (pointer-doubling
-         |ancestor counting) $accRounds rounds;
-         |WATERSHED (pointer doubling) $wsRounds rounds ≈
-         |log2($rampLen) — at a 10³-cell real-DEM path that is ~10
-         |shuffles instead of ~10³.
          |
          |## Round-3/4 operator additions (timed separately, steady-state JVM)
          |

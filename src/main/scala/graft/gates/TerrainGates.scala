@@ -289,11 +289,10 @@ object TerrainGates {
          |FROM shfin f JOIN simg s ON s.k = f.k
          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
 
-    // D8 flow accumulation (upstream cell count): pointer-doubling
-    // ancestor counting over the flow forest — ceil(log2 path)
-    // shuffle rounds, all images advance in the same job. The
-    // oracle walks every cell's flow path with a recursive CTE and
-    // counts visits.
+    // D8 flow accumulation (upstream cell count): one forward pass
+    // over each image's D8 topological order, map-only. The oracle
+    // walks every cell's flow path with a recursive CTE and counts
+    // visits.
     Gate("q_flow_accum", (s, dir) =>
       graft.ops.Terrain.flowAccum(Synth.demImages(s, dir, Synth.smallRaw))
         .groupBy("image_id")
@@ -489,10 +488,9 @@ object TerrainGates {
          |FROM mkt t LEFT JOIN mks s ON t.gi = s.gi AND t.gj = s.gj
          |ORDER BY 1, 2""".stripMargin)),
 
-    // watershed basins: every cell labeled by its terminal pit via
-    // POINTER DOUBLING (log-round convergence — ~10 shuffles for
-    // 1000-cell flow paths where frontier propagation needs ~1000);
-    // per-image basin count / max size / size² checksum
+    // watershed basins: every cell labeled by its terminal pit in
+    // one backward pass over each image's D8 topological order,
+    // map-only; per-image basin count / max size / size² checksum
     Gate("q_watershed", (s, dir) =>
       graft.ops.Terrain.watershed(Synth.demImages(s, dir, Synth.smallRaw))
         .groupBy(col("image_id"), col("px"), col("py"))

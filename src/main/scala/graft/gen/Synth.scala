@@ -283,11 +283,9 @@ object Synth {
       Codec.encode(Array(p), w, h, "raw-i16le")
     })
     // NO repartition here (unlike imagesWithBytes): every demImages
-    // gate filters to the tiny smallRaw set, and the terrain loops
-    // checkpoint the exploded cells — an explicit round-robin exchange
-    // is not AQE-coalescible, so it pins 32-partition checkpoints and
-    // costs the pointer-doubling rounds ~2x in task launches (measured
-    // q_flow_accum 5.0s -> 9.0s)
+    // gate filters to the tiny smallRaw set and runs per-image
+    // kernels in the scan's own tasks, so an explicit round-robin
+    // exchange (not AQE-coalescible) would only add a shuffle stage
     keyFilter(images(spark, sfDir))
       .select(col("k"), col("image_id"), col("w"), col("h"))
       .withColumn("dem_bytes", enc(col("k")))

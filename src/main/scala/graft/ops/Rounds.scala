@@ -8,9 +8,6 @@ import org.apache.spark.SparkContext
   *     `ShortestPaths.boundedSssp`, `PageRank.pagerankInt`) are 5-line
   *     loops that stay lazy until one terminal action, so there is no
   *     materialized generation to free mid-loop;
-  *   - `Terrain.flowAccum` must keep every round's pairs slice: the
-  *     final ancestor count and each later round's probe read all of
-  *     them, so no generation is ever superseded;
   *   - `Knn.knn` ring-doubles over `.cache()`d rounds, not checkpoints,
   *     and unpersists them all once its small result is collected.
   */

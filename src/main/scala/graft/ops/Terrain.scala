@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 import graft.core.Codec
 
@@ -15,13 +16,13 @@ import graft.core.Codec
   * the trend).
   *
   * All per-pixel math is integer (or single-IEEE-op double), so every
-  * operator is DuckDB-oracle value-exact. Scale posture: slope/trend/
-  * cost-distance are decode-once per-image map work (no shuffle at
-  * all); the two genuinely iterative ops — flow accumulation and
-  * watershed — both run POINTER DOUBLING over the flow forest, so
-  * their shuffle-round count is ceil(log2 longest-flow-path), all
-  * images advancing in the same job (corpus-wide rounds, never a
-  * per-image loop).
+  * operator is DuckDB-oracle value-exact. Scale posture: every
+  * operator is decode-once per-image map work (no shuffle at all) —
+  * the iterative ones too: cost-distance runs Dijkstra, and Strahler
+  * order, flow accumulation and watershed run one pass each over the
+  * shared D8 topological order [[flowOrder]], all in task memory. One
+  * DEM is one row, so one raster's whole grid is always in one task;
+  * the corpus is the scale axis.
   */
 object Terrain {
 
@@ -176,227 +177,130 @@ object Terrain {
     (n, ts, tm, rs, rm)
   })
 
-  /** STRAHLER STREAM ORDER over the D8 flow forest (Strahler 1957):
-    * cells with no upstream inflow have order 1; a cell's order is
-    * the max of its upstream orders, +1 when ≥2 upstream cells attain
-    * that max. Computed per image in ONE topological pass (in-degree
-    * queue — the per-key-sequential kernel shape: images parallelize
-    * across the corpus, the per-image pass is linear). Returns the
-    * per-order cell histogram [(ord, count)]. The oracle replays it
-    * as a monotone fixpoint scatter-CTE (all-1 start; the iterate
-    * never overshoots and converges within the flow-DAG depth —
-    * measured ≤ 41 on the fixture, bound 48). */
-  val strahlerCounts = udf((bytes: Array[Byte], w: Int, h: Int) => {
-    val z = Codec.decode(bytes, w, h, 1, "raw-i16le")(0)
+  /** The D8 flow forest of one decoded DEM: each cell's downstream
+    * index (−1 for a pit) and a Kahn topological order of the cells,
+    * sources first. Every flow step needs a strictly positive drop, so
+    * the forest is a DAG: the order holds all w·h cells and lists each
+    * cell before its target. Memory: three Int[w·h] (target, in-degree,
+    * order). */
+  private def flowOrder(z: Array[Double], w: Int,
+                        h: Int): (Array[Int], Array[Int]) = {
     val n = w * h
     val target = new Array[Int](n)
     val indeg = new Array[Int](n)
-    val ord = new Array[Int](n)
     var i = 0
     while (i < n) {
       val x = i % w; val y = i / w
       val d = flowDir(z, w, h, x, y)
       target(i) = if (d < 0) -1 else (y + Dy(d)) * w + (x + Dx(d))
+      if (d >= 0) indeg(target(i)) += 1
       i += 1
     }
-    i = 0
-    while (i < n) { if (target(i) >= 0) indeg(target(i)) += 1; i += 1 }
-    // topological queue; track per-cell (max upstream ord, count at max)
-    val mx = new Array[Int](n); val cm = new Array[Int](n)
-    val queue = new Array[Int](n)
+    val order = new Array[Int](n)
     var qh = 0; var qt = 0
     i = 0
-    while (i < n) { if (indeg(i) == 0) { queue(qt) = i; qt += 1 }; i += 1 }
+    while (i < n) { if (indeg(i) == 0) { order(qt) = i; qt += 1 }; i += 1 }
     while (qh < qt) {
-      val c = queue(qh); qh += 1
+      val t = target(order(qh)); qh += 1
+      if (t >= 0) {
+        indeg(t) -= 1
+        if (indeg(t) == 0) { order(qt) = t; qt += 1 }
+      }
+    }
+    (target, order)
+  }
+
+  /** STRAHLER STREAM ORDER over the D8 flow forest (Strahler 1957):
+    * cells with no upstream inflow have order 1; a cell's order is
+    * the max of its upstream orders, +1 when ≥2 upstream cells attain
+    * that max. Computed per image in ONE forward pass over
+    * [[flowOrder]] (the per-key-sequential kernel shape: images
+    * parallelize across the corpus, the per-image pass is linear).
+    * Returns the per-order cell histogram [(ord, count)]. The oracle
+    * replays it as a monotone fixpoint scatter-CTE (all-1 start; the
+    * iterate never overshoots and converges within the flow-DAG depth
+    * — measured ≤ 41 on the fixture, bound 48). */
+  val strahlerCounts = udf((bytes: Array[Byte], w: Int, h: Int) => {
+    val (target, order) =
+      flowOrder(Codec.decode(bytes, w, h, 1, "raw-i16le")(0), w, h)
+    val n = w * h
+    // per cell: (max upstream ord, count at max), then its own ord
+    val mx = new Array[Int](n); val cm = new Array[Int](n)
+    val ord = new Array[Int](n)
+    for (c <- order) {
       ord(c) = if (mx(c) == 0) 1 else mx(c) + (if (cm(c) >= 2) 1 else 0)
       val t = target(c)
       if (t >= 0) {
         if (ord(c) > mx(t)) { mx(t) = ord(c); cm(t) = 1 }
         else if (ord(c) == mx(t)) cm(t) += 1
-        indeg(t) -= 1
-        if (indeg(t) == 0) { queue(qt) = t; qt += 1 }
       }
     }
     val hist = scala.collection.mutable.Map.empty[Int, Long]
       .withDefaultValue(0L)
-    i = 0
-    while (i < n) { hist(ord(i)) += 1; i += 1 }
+    ord.foreach(o => hist(o) += 1)
     hist.toSeq.sortBy(_._1)
   })
 
-  /** Per-image flow edges (x, y, tx, ty): one row per NON-pit cell,
-    * target = the D8 downstream neighbor. Pits emit no edge. */
-  val flowEdgesUdf = udf((bytes: Array[Byte], w: Int, h: Int) => {
-    val z = Codec.decode(bytes, w, h, 1, "raw-i16le")(0)
-    val out = scala.collection.mutable.ArrayBuffer[(Int, Int, Int, Int)]()
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val d = flowDir(z, w, h, x, y)
-        if (d >= 0) out += ((x, y, x + Dx(d), y + Dy(d)))
-        x += 1
-      }
-      y += 1
-    }
-    out.toSeq
-  })
-
-  /** Per-cell flow pointer (x, y, px, py): the D8 downstream neighbor,
-    * or SELF for pits — one row per cell. One decode pass yields both
-    * the edge set (rows where (px,py) ≠ (x,y)) and the full grid, so
-    * flowAccum/watershed no longer pay a second explode plus a
-    * grid⋈edges shuffle join just to seed their pointer tables. */
-  val flowPtrUdf = udf((bytes: Array[Byte], w: Int, h: Int) => {
-    val z = Codec.decode(bytes, w, h, 1, "raw-i16le")(0)
-    val out = new Array[(Int, Int, Int, Int)](w * h)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val d = flowDir(z, w, h, x, y)
-        out(y * w + x) =
-          if (d < 0) (x, y, x, y) else (x, y, x + Dx(d), y + Dy(d))
-        x += 1
-      }
-      y += 1
-    }
-    out.toSeq
+  /** Per-image kernel of [[flowAccum]]: (x, y, acc) for every cell. */
+  private val flowAccumUdf = udf((bytes: Array[Byte], w: Int, h: Int) => {
+    val (target, order) =
+      flowOrder(Codec.decode(bytes, w, h, 1, "raw-i16le")(0), w, h)
+    val acc = Array.fill(w * h)(1)
+    for (c <- order) if (target(c) >= 0) acc(target(c)) += acc(c)
+    Seq.tabulate(w * h)(i => (i % w, i / w, acc(i).toLong))
   })
 
   /** D8 flow ACCUMULATION: acc(c) = number of cells whose flow path
     * passes through c (including c itself) — the upstream-area
     * operator behind stream extraction / watershed sizing.
     *
-    * Distributed as POINTER-DOUBLING ancestor counting over the flow
-    * forest (the same machinery [[watershed]] uses, applied to
-    * counting): acc(c) = 1 + #{u : c is a proper ancestor of u}, so
-    * it suffices to enumerate every (descendant, ancestor) pair.
-    * `pairs` holds, after round i, exactly the pairs at path distance
-    * ∈ [1, 2^i]; `far` holds each cell's 2^i-th ancestor while one
-    * exists. Round i composes far with pairs (producing the distances
-    * (2^i, 2^{i+1}] — distinct path positions are distinct cells on a
-    * DAG, so no pair is ever produced twice) and squares far, so the
-    * loop runs ceil(log2 longest-flow-path) rounds — ~10 shuffle
-    * rounds for a 10³-cell real-DEM path instead of the ~10³ rounds
-    * of one-step frontier propagation (guide §2.4: round count IS the
-    * shuffle count here). Total shuffled volume is the same
-    * Σ path-lengths the frontier version moved; only the round
-    * (= job + checkpoint) count collapses. Measured on the bench ramp
-    * DEM (96-cell path): 7 rounds vs 96, q_flow_accum 38.6 s → ~4 s
-    * at sf0.1/local[32].
+    * A decode-once PER-IMAGE kernel, like [[costDistance]]: every cell
+    * starts at 1 and, in [[flowOrder]]'s sources-first order, adds its
+    * count into its target's — each cell's count is final before it
+    * is passed on. No exchange, checkpoint or round; per-task memory
+    * is the decoded plane plus three Int[w·h] (target, order, acc;
+    * in-degree while the order is built), besides the emitted rows.
     *
     * Input: dem table (k, image_id, w, h, dem_bytes). Output: one row
-    * per CELL (k, image_id, x, y, acc). */
-  def flowAccum(dem: DataFrame): DataFrame = flowAccumRounds(dem)._1
+    * per CELL (k, image_id, x, y, acc: bigint). */
+  def flowAccum(dem: DataFrame): DataFrame = cellRows(dem, flowAccumUdf, "acc")
 
-  /** [[flowAccum]] and the number of doubling rounds it ran. Stays off
-    * [[Rounds]]: each round's probe and the final count read every
-    * round's pairs slice, so no generation is ever superseded. */
-  private[graft] def flowAccumRounds(dem: DataFrame): (DataFrame, Int) = {
-    val meta = dem.select(col("k"), col("image_id"))
-    val cells = dem
-      .withColumn("e", explode(flowPtrUdf(col("dem_bytes"),
-        col("w").cast("int"), col("h").cast("int"))))
-      .select(col("k"), col("e._1").as("x"), col("e._2").as("y"),
-        col("e._3").as("px"), col("e._4").as("py"))
-      .localCheckpoint()
-    var pairs = cells
-      .where(col("px") =!= col("x") || col("py") =!= col("y"))
-      .select(col("k"), col("x").as("ux"), col("y").as("uy"),
-        col("px").as("ax"), col("py").as("ay"))
-      .localCheckpoint()
-    var far = pairs.select(col("k"), col("ux"), col("uy"),
-      col("ax").as("fx"), col("ay").as("fy"))
-    var rounds = 0
-    var nFar = far.count()
-    while (nFar > 0) {
-      rounds += 1
-      // ONE compose join per round: the probe side unions pairs
-      // (→ new ancestor pairs at distances (2^i, 2^{i+1}]) with far
-      // itself tagged isfar (→ the squared 2^{i+1}-pointer), so each
-      // round is a single shuffle-join + checkpoint job plus a cheap
-      // block-scan count — the two-join form paid two checkpoint
-      // jobs per round.
-      val probe = pairs
-        .select(col("k"), col("ux").as("fx"), col("uy").as("fy"),
-          col("ax"), col("ay"), lit(false).as("isfar"))
-        .unionByName(far.select(col("k"), col("ux").as("fx"),
-          col("uy").as("fy"), col("fx").as("ax"), col("fy").as("ay"),
-          lit(true).as("isfar")))
-      val composed = far.join(probe, Seq("k", "fx", "fy"))
-        .select(col("k"), col("ux"), col("uy"), col("ax"), col("ay"),
-          col("isfar"))
-        .localCheckpoint()
-      val newFar = composed.where(col("isfar"))
-        .select(col("k"), col("ux"), col("uy"),
-          col("ax").as("fx"), col("ay").as("fy"))
-      nFar = newFar.count()
-      pairs = pairs.unionByName(composed.where(!col("isfar"))
-        .select(col("k"), col("ux"), col("uy"), col("ax"), col("ay")))
-      far = newFar
-    }
-    val ups = pairs
-      .groupBy(col("k"), col("ax").as("x"), col("ay").as("y"))
-      .agg(count(lit(1)).as("ups"))
-    (cells.join(ups, Seq("k", "x", "y"), "left")
-      .join(broadcast(meta), Seq("k"))
-      .select(col("k"), col("image_id"), col("x"), col("y"),
-        (coalesce(col("ups"), lit(0L)) + 1L).as("acc")), rounds)
-  }
+  /** Per-image kernel of [[watershed]]: (x, y, px, py) for every cell. */
+  private val watershedUdf = udf((bytes: Array[Byte], w: Int, h: Int) => {
+    val (target, order) =
+      flowOrder(Codec.decode(bytes, w, h, 1, "raw-i16le")(0), w, h)
+    val pit = new Array[Int](w * h)
+    for (c <- order.reverseIterator)
+      pit(c) = if (target(c) < 0) c else pit(target(c))
+    Seq.tabulate(w * h)(i => (i % w, i / w, pit(i) % w, pit(i) / w))
+  })
 
   /** WATERSHED basin labeling: every cell labeled by the PIT its flow
     * path terminates at (pits label themselves) — the D8 drainage
     * partition of the grid.
     *
-    * Distributed as POINTER DOUBLING over the flow pointers: round i
-    * replaces every cell's pointer with its pointer's pointer, so the
-    * followed distance doubles each round and the loop converges in
-    * ceil(log2 longest-path) rounds (vs the linear round count of
-    * frontier propagation — at a 100 TB raster with flow paths of
-    * ~10³ cells that is ~10 shuffles instead of ~10³). Pits point to
-    * themselves, so converged pointers are exactly the terminal pits;
-    * convergence = a round that changes no pointer.
+    * A decode-once PER-IMAGE kernel: walking [[flowOrder]] backwards
+    * visits each cell after its target, so a cell's label is itself
+    * if it is a pit, else its target's label. No exchange, checkpoint
+    * or round; per-task memory is the decoded plane plus three
+    * Int[w·h] (target, order, label; in-degree while the order is
+    * built), besides the emitted rows.
     *
     * Output: one row per cell (k, image_id, x, y, px, py). */
-  def watershed(dem: DataFrame): DataFrame = watershedRounds(dem)._1
+  def watershed(dem: DataFrame): DataFrame =
+    cellRows(dem, watershedUdf, "px", "py")
 
-  /** Round cap of [[watershed]]: a flow path visits at most w·h < 2^32
-    * cells, so doubling reaches every pit within 32 rounds, plus the
-    * round that moves no pointer: ceil(log2(w·h)) + 1 ≤ 33. */
-  private val WatershedMaxRounds = 33
-
-  /** [[watershed]] and the number of doubling rounds it ran. */
-  private[graft] def watershedRounds(dem: DataFrame): (DataFrame, Int) = {
-    val meta = dem.select(col("k"), col("image_id"))
-    // initial pointer: flow target, or self for pits — one decode
-    // pass, no grid⋈edges seed join
-    val (ptr, n, done) = Rounds.untilStable(
-        dem.sparkSession.sparkContext, WatershedMaxRounds)(
-      dem
-        .withColumn("e", explode(flowPtrUdf(col("dem_bytes"),
-          col("w").cast("int"), col("h").cast("int"))))
-        .select(col("k"), col("e._1").as("x"), col("e._2").as("y"),
-          col("e._3").as("px"), col("e._4").as("py"))
-        .localCheckpoint()) { ptr =>
-      val hop = ptr.select(col("k"), col("x").as("px"), col("y").as("py"),
-        col("px").as("qx"), col("py").as("qy"))
-      // the moved flag rides the checkpointed round itself, so
-      // convergence detection is a scan of the checkpoint, not a
-      // second shuffle join per round (guide §2.4)
-      val next = ptr.join(hop, Seq("k", "px", "py"))
-        .select(col("k"), col("x"), col("y"),
-          col("qx").as("px"), col("qy").as("py"),
-          (col("qx") =!= col("px") || col("qy") =!= col("py")).as("moved"))
-        .localCheckpoint()
-      (next.drop("moved"), next.where(col("moved")).count() == 0)
-    }
-    require(done, s"watershed did not converge in $n rounds")
-    (ptr.join(broadcast(meta), Seq("k"))
-      .select(col("k"), col("image_id"), col("x"), col("y"),
-        col("px"), col("py")), n)
-  }
+  /** Explodes a per-image kernel's (x, y, v1, v2, …) tuples into rows
+    * (k, image_id, x, y, names…) — map-only: each DEM row is decoded
+    * and walked inside one task. */
+  private def cellRows(dem: DataFrame, kernel: UserDefinedFunction,
+                       names: String*): DataFrame =
+    dem
+      .withColumn("e", explode(kernel(col("dem_bytes"),
+        col("w").cast("int"), col("h").cast("int"))))
+      .select(Seq(col("k"), col("image_id"), col("e._1").as("x"),
+        col("e._2").as("y")) ++ names.zipWithIndex.map { case (n, i) =>
+          col(s"e._${i + 3}").as(n) }: _*)
 
   /** Per-image multi-source Dijkstra kernel for [[costDistance]]:
     * decode once, run the binary-heap label-setting pass in task
@@ -471,11 +375,7 @@ object Terrain {
     * per REACHED cell (k, image_id, x, y, c, dist); images without a
     * source cell emit nothing. */
   def costDistance(dem: DataFrame): DataFrame =
-    dem
-      .withColumn("e", explode(costDistUdf(col("dem_bytes"),
-        col("w").cast("int"), col("h").cast("int"))))
-      .select(col("k"), col("image_id"), col("e._1").as("x"),
-        col("e._2").as("y"), col("e._3").as("c"), col("e._4").as("dist"))
+    cellRows(dem, costDistUdf, "c", "dist")
 
   /** CONTOUR crossings (the marching-squares primitive): for each iso
     * level, a grid edge is crossed iff exactly one endpoint sits below

@@ -338,28 +338,15 @@ object PlanDump {
       "Map-only: decode + Horn stencil per image inside the project — " +
         "NO exchange anywhere; the scan prunes to (k, w, h) and the " +
         "payload column. Hillshade/contours/Harris share this shape."))
-    // one ROUND of the two iterative ops (the loop repeats this plan
-    // on checkpoint leaves; the full result plan would only show the
-    // final join over opaque checkpoints)
-    val edgesT = demT.withColumn("e", explode(
-        graft.ops.Terrain.flowEdgesUdf(col("dem_bytes"),
-          col("w").cast("int"), col("h").cast("int"))))
-      .select(col("k"), col("e._1").as("x"), col("e._2").as("y"),
-        col("e._3").as("tx"), col("e._4").as("ty"))
-    val frontier0 = demT.select(col("k"),
-        explode(sequence(lit(0), col("w").cast("int") - 1)).as("x"))
-      .withColumn("y", lit(0)).withColumn("cnt", lit(1L))
-    val oneRound = frontier0.join(edgesT, Seq("k", "x", "y"))
-      .groupBy(col("k"), col("tx").as("x"), col("ty").as("y"))
-      .agg(sum(col("cnt")).as("cnt"))
-    md.append(fmt("flow accumulation — one frontier round", oneRound,
-      "Each round is ONE hash-shuffle of only the LIVE frontier " +
-        "(equi-join on the cell key, partial-aggregated SUM); the " +
-        "frontier shrinks as paths terminate, and arrivals buffer as " +
-        "checkpoint leaves for a single end aggregation — total " +
-        "shuffle volume = total flow-path length. Watershed replaces " +
-        "the per-step hop with pointer DOUBLING: same per-round plan, " +
-        "log2(path) rounds."))
+    md.append(fmt("terrain flow accumulation (per-image kernel)",
+      graft.ops.Terrain.flowAccum(demT),
+      "Map-only: decode + one D8 topological pass per image, exploded " +
+        "to one row per cell — NO Exchange, no checkpoint, no round."))
+    md.append(fmt("terrain watershed (per-image kernel)",
+      graft.ops.Terrain.watershed(demT),
+      "Map-only: the same decode + D8 topological order, walked " +
+        "backwards to label each cell with its pit — NO Exchange, no " +
+        "checkpoint, no round."))
 
     // ---- graph / sketch / binning pack ----
     val tris = SpatialJoin.triangleCensus(

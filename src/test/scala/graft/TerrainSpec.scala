@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.core.Codec
 import graft.gen.Synth
 import graft.ops.Terrain
@@ -41,23 +43,31 @@ class TerrainSpec extends SparkSuite {
     assert(Terrain.flowDir(corner, 3, 3, 0, 0) == 1) // SE diagonal is steepest
   }
 
-  test("flowAccum == inline path-walk reference on synth DEMs") {
+  /** Inputs of the path-walk specs: two synth DEMs, the 96×4 ramp
+    * (96-cell flow paths), a flat plateau (every cell a pit), and a
+    * 1×N and an N×1 strip. */
+  private val walkDems: Seq[(Long, Int, Int, Array[Double])] = {
+    def synth(k: Long, w: Int, h: Int) = (k, w, h,
+      Array.tabulate(w * h)(i => Synth.demValue(k, i % w, i / w).toDouble))
+    Seq(synth(7L, 20, 16), synth(13L, 20, 16),
+      (101L, 96, 4, Array.tabulate(96 * 4)(i => (100 + i % 96).toDouble)),
+      (102L, 9, 7, Array.fill(9 * 7)(500.0)),
+      synth(103L, 1, 37), synth(104L, 37, 1))
+  }
+
+  private def walkDemTable = {
     import spark.implicits._
-    val ks = Seq(7L, 13L) // small synth images (w,h < 64 not required here)
-    val rows = ks.map { k =>
-      val w = 20; val h = 16
-      val z = Array.tabulate(w * h)(i =>
-        Synth.demValue(k, i % w, i / w).toDouble)
-      (k, s"img-$k", w, h, enc(z, w, h))
-    }
-    val dem = rows.toDF("k", "image_id", "w", "h", "dem_bytes")
-    val got = Terrain.flowAccum(dem).collect()
+    walkDems.map { case (k, w, h, z) => (k, s"img-$k", w, h, enc(z, w, h)) }
+      .toDF("k", "image_id", "w", "h", "dem_bytes")
+  }
+
+  test("flowAccum == inline path-walk reference on synth DEMs") {
+    val got = Terrain.flowAccum(walkDemTable).collect()
       .map(r => ((r.getLong(0), r.getInt(2), r.getInt(3)), r.getLong(4)))
       .toMap
+    assert(got.size == walkDems.map(d => d._2 * d._3).sum)
     // reference: walk every cell's path, count visits
-    for ((k, _, w, h, _) <- rows) {
-      val z = Array.tabulate(w * h)(i =>
-        Synth.demValue(k, i % w, i / w).toDouble)
+    for ((k, w, h, z) <- walkDems) {
       val ref = scala.collection.mutable.Map[(Int, Int), Long]()
         .withDefaultValue(0L)
       val dx = Array(1, 1, 0, -1, -1, -1, 0, 1)
@@ -77,23 +87,13 @@ class TerrainSpec extends SparkSuite {
   }
 
   test("watershed == terminal of the inline path walk") {
-    import spark.implicits._
-    val ks = Seq(7L, 13L)
-    val rows = ks.map { k =>
-      val w = 20; val h = 16
-      val z = Array.tabulate(w * h)(i =>
-        Synth.demValue(k, i % w, i / w).toDouble)
-      (k, s"img-$k", w, h, enc(z, w, h))
-    }
-    val dem = rows.toDF("k", "image_id", "w", "h", "dem_bytes")
-    val got = Terrain.watershed(dem).collect()
+    val got = Terrain.watershed(walkDemTable).collect()
       .map(r => ((r.getLong(0), r.getInt(2), r.getInt(3)),
         (r.getInt(4), r.getInt(5)))).toMap
+    assert(got.size == walkDems.map(d => d._2 * d._3).sum)
     val dx = Array(1, 1, 0, -1, -1, -1, 0, 1)
     val dy = Array(0, 1, 1, 1, 0, -1, -1, -1)
-    for ((k, _, w, h, _) <- rows) {
-      val z = Array.tabulate(w * h)(i =>
-        Synth.demValue(k, i % w, i / w).toDouble)
+    for ((k, w, h, z) <- walkDems) {
       for (y0 <- 0 until h; x0 <- 0 until w) {
         var x = x0; var y = y0; var d = Terrain.flowDir(z, w, h, x, y)
         while (d >= 0) { x += dx(d); y += dy(d); d = Terrain.flowDir(z, w, h, x, y) }
@@ -102,29 +102,28 @@ class TerrainSpec extends SparkSuite {
     }
   }
 
-  test("watershed checkpoint residency is bounded, not O(rounds)") {
+  test("flowAccum/watershed: map-only, nothing persisted, fixed schemas") {
     import spark.implicits._
-    // the bench's 96×4 ramp: one 96-cell flow path, 8 doubling rounds
-    // (7 for flowAccum, which needs no confirming round); each
-    // watershed round must free the pointer generation it superseded
+    // per-image kernels: no exchange in the executed plan, no
+    // checkpoint or cache left behind
     val w = 96; val h = 4
     val z = Array.tabulate(w * h)(i => (100 + i % w).toDouble)
     val dem = Seq((0L, "ramp", w.toLong, h.toLong, enc(z, w, h)))
       .toDF("k", "image_id", "w", "h", "dem_bytes")
-    val (acc, accRounds) = Terrain.flowAccumRounds(dem)
-    assert(acc.count() == w * h)
-    assert(accRounds == 7)
+    val cell = Seq("k" -> LongType, "image_id" -> StringType,
+      "x" -> IntegerType, "y" -> IntegerType)
     val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    val (ws, rounds) = Terrain.watershedRounds(dem)
-    ws.count()
-    assert(rounds == 8)
-    val leaked = sc.getPersistentRDDs.keySet.toSet -- before
-    assert(leaked.size <= 2,
-      s"watershed left ${leaked.size} checkpointed RDDs after " +
-        s"$rounds rounds (expected ≤ 2 generations)")
-    for (id <- leaked; rdd <- sc.getPersistentRDDs.get(id))
-      rdd.unpersist(blocking = false)
+    for ((op, tail) <- Seq[(DataFrame => DataFrame, Seq[(String, DataType)])](
+        (Terrain.flowAccum, Seq("acc" -> LongType)),
+        (Terrain.watershed, Seq("px" -> IntegerType, "py" -> IntegerType)))) {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val df = op(dem)
+      assert(df.count() == w * h)
+      assert(sc.getPersistentRDDs.keySet.toSet == before)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"), plan)
+      assert(df.schema.map(f => f.name -> f.dataType) == cell ++ tail)
+    }
   }
 
   test("contourAgg: hand golden on a 2×2 checker column") {
